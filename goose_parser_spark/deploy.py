@@ -1,8 +1,8 @@
 """Deployment helper: ship this package to executors.
 
 The compiled rule tree is pickled **by reference** into the
-mapInPandas closure, so executor Python workers must be able to
-``import goose_parser_spark``. On a real cluster that is
+map-kernel closure (kernel.map_docs), so executor Python workers must
+be able to ``import goose_parser_spark``. On a real cluster that is
 ``spark-submit --py-files goose_parser_spark.zip`` (BASELINE.json:14);
 for programmatic use :func:`ship_package` builds the zip on the fly
 and registers it via ``sc.addPyFile`` — the same mechanism, no
@@ -52,8 +52,8 @@ def ship_package(spark) -> str | None:
 
     Idempotent per SparkContext (memoized). Returns the zip path that
     was shipped, or None when already shipped. Called automatically by
-    every entry point that launches a Python UDF (extract,
-    extract_features), so library users never hit
+    every entry point that launches a Python UDF (kernel.map_docs and
+    the file-level readers), so library users never hit
     ``ModuleNotFoundError`` on executors regardless of cwd; on real
     clusters ``spark-submit --py-files`` makes this a no-op re-add.
     """

@@ -1,182 +1,34 @@
-"""Arrow-batched extraction over a pages DataFrame.
+"""Rule-tree extraction over a pages DataFrame.
 
-The hot path of the engine: Arrow-batched ``mapInArrow`` — the ONLY
+The hot path of the engine runs on the per-document map kernel
+(kernel.map_docs): one Arrow-batched ``mapInArrow`` is the ONLY
 JVM↔Python boundary in the job, amortized per batch (no per-row
 Python, BASELINE.json:15; design per "Accelerating Python UDFs in
-Vectorized Query Execution", CIDR 2022 — see PAPERS.md). Per batch we loop documents in Python
-(DOM parsing is inherently per-document), parse each page's HTML once,
-and evaluate the entire compiled rule tree against it (SURVEY.md §3.2).
+Vectorized Query Execution", CIDR 2022 — see PAPERS.md). Per batch the
+kernel loops documents in Python (DOM parsing is inherently
+per-document); each page's HTML is parsed once and the entire
+compiled rule tree is evaluated against it (SURVEY.md §3.2).
 
 Failure isolation (SURVEY.md §2.8 I4): a poison document yields
-``extracted = NULL`` plus an ``error`` string and is counted in the
-per-partition metrics — it never kills the job.
+``extracted = NULL`` plus an ``error`` string — it never kills the
+job.
 """
 
 from __future__ import annotations
 
-import time
-from collections.abc import Iterator
 from typing import TYPE_CHECKING
 
-import pandas as pd
+from pyspark.sql.types import StringType, StructField, StructType
 
-from pyspark.sql.types import (
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
-
+from goose_parser_spark.kernel import map_docs
 from goose_parser_spark.rules.compiler import CompiledRules, RuleCompiler
-from goose_parser_spark.rules.evaluator import evaluate_document
+from goose_parser_spark.rules.evaluator import (
+    evaluate_document,
+    evaluate_document_many,
+)
 
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import DataFrame
-
-
-def output_schema(compiled: CompiledRules, url_col: str = "url",
-                  udf: bool = False) -> StructType:
-    """Schema of the extractor output: url + extracted + error + parse_ns.
-
-    ``parse_ns`` rides along per document so per-partition metrics can
-    be aggregated from the output table in one pass, without a second
-    trip through Python (SURVEY.md §2.8 I2). ``udf=True`` yields the
-    schema the Python UDF emits BEFORE native transform suffixes are
-    applied post-UDF (functions/native.py).
-    """
-    extracted = (compiled.udf_schema or compiled.schema) if udf \
-        else compiled.schema
-    return StructType([
-        StructField(url_col, StringType(), False),
-        StructField("extracted", extracted, True),
-        StructField("error", StringType(), True),
-        StructField("parse_ns", LongType(), True),
-        StructField("bytes_in", LongType(), True),
-    ])
-
-
-def build_extractor(
-    compiled: CompiledRules,
-    html_col: str = "html",
-    url_col: str = "url",
-):
-    """Build the mapInPandas function for a compiled rule tree.
-
-    The compiled plan (parsed selectors, compiled transforms, derived
-    schema) is captured in the closure — pickled once and shipped to
-    every executor, the moral equivalent of a broadcast variable.
-
-    NOTE: this variant runs the FULL transform chain in Python and
-    pairs with ``output_schema(compiled)`` (the final schema). The
-    shipped :func:`extract` path uses the Arrow variant plus native
-    post-UDF lowering of byte-safe suffixes (functions/native.py);
-    both produce identical values (test_native_lowering.py).
-    """
-
-    def extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            urls = pdf[url_col]
-            htmls = pdf[html_col]
-            n = len(pdf)
-            extracted: list[object] = [None] * n
-            errors: list[str | None] = [None] * n
-            parse_ns: list[int] = [0] * n
-            bytes_in: list[int] = [0] * n
-            for i in range(n):
-                raw = htmls.iloc[i]
-                bytes_in[i] = len(raw) if raw is not None else 0
-                t0 = time.perf_counter_ns()
-                try:
-                    if raw is None:
-                        raise ValueError("html is NULL")
-                    extracted[i] = evaluate_document(compiled, raw)
-                except Exception as exc:  # noqa: BLE001 — I4 poison isolation
-                    errors[i] = f"{type(exc).__name__}: {exc}"
-                parse_ns[i] = time.perf_counter_ns() - t0
-            yield pd.DataFrame({
-                url_col: urls.reset_index(drop=True),
-                "extracted": pd.Series(extracted, dtype="object"),
-                "error": pd.Series(errors, dtype="object"),
-                "parse_ns": pd.Series(parse_ns, dtype="int64"),
-                "bytes_in": pd.Series(bytes_in, dtype="int64"),
-            })
-
-    return extract_batches
-
-
-def build_arrow_extractor(
-    compiled: CompiledRules,
-    html_col: str = "html",
-    url_col: str = "url",
-    keep_cols: tuple[str, ...] = (),
-    spark_schema: StructType | None = None,
-):
-    """mapInArrow variant of the extractor: consumes/produces raw
-    Arrow RecordBatches, skipping the Arrow→pandas→Arrow conversion of
-    multi-KB html blobs (one fewer copy + no per-row object-array
-    churn — measurable at high core counts where allocator traffic
-    contends on the kernel mmap lock)."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    out_arrow_schema = to_arrow_schema(spark_schema)
-
-    def extract_batches(batches):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        for batch in batches:
-            names = batch.schema.names
-            urls = batch.column(names.index(url_col))
-            hcol = batch.column(names.index(html_col))
-            n = batch.num_rows
-            # one C-level materialization per batch (vs per-element
-            # scalar wrappers or a pandas object Series). For binary
-            # html, cast to utf8 FIRST: the cast validates+reinterprets
-            # buffers in C and to_pylist then builds str objects
-            # directly — skipping n intermediate bytes objects and n
-            # per-doc .decode() calls (~7% of batch time at 16 cores).
-            # Invalid utf-8 anywhere in the batch falls back to the
-            # per-doc decode path so poison docs stay isolated (I4).
-            if pa.types.is_binary(hcol.type) or pa.types.is_large_binary(hcol.type):
-                lengths = pc.binary_length(hcol).to_pylist()  # true byte sizes
-                try:
-                    raws = hcol.cast(pa.large_string()).to_pylist()
-                except pa.ArrowInvalid:
-                    raws = [b.decode("utf-8", errors="replace")
-                            if b is not None else None
-                            for b in hcol.to_pylist()]
-            else:
-                raws = hcol.to_pylist()
-                lengths = None
-            extracted: list[object] = [None] * n
-            errors: list[str | None] = [None] * n
-            parse_ns: list[int] = [0] * n
-            bytes_in: list[int] = [0] * n
-            for i in range(n):
-                raw = raws[i]
-                if raw is not None:
-                    bytes_in[i] = lengths[i] if lengths is not None else len(raw)
-                t0 = time.perf_counter_ns()
-                try:
-                    if raw is None:
-                        raise ValueError("html is NULL")
-                    extracted[i] = evaluate_document(compiled, raw,
-                                                     skip_lowered=True)
-                except Exception as exc:  # noqa: BLE001 — I4 poison isolation
-                    errors[i] = f"{type(exc).__name__}: {exc}"
-                parse_ns[i] = time.perf_counter_ns() - t0
-            arrays = [
-                urls,
-                pa.array(extracted, type=out_arrow_schema.field("extracted").type),
-                pa.array(errors, type=pa.string()),
-                pa.array(parse_ns, type=pa.int64()),
-                pa.array(bytes_in, type=pa.int64()),
-            ]
-            for c in keep_cols:
-                arrays.append(batch.column(names.index(c)))
-            yield pa.RecordBatch.from_arrays(arrays, schema=out_arrow_schema)
-
-    return extract_batches
 
 
 def extract(
@@ -188,23 +40,21 @@ def extract(
 ) -> "DataFrame":
     """Run rule-tree extraction over a pages DataFrame.
 
-    Selects only the needed columns FIRST so Catalyst prunes the scan
-    to ``url, html`` (+ keep_cols) — at 10^12 docs the html blob is the
-    only heavy column we should ever deserialize (SURVEY.md §4.1/§4.2).
+    Output: ``url, extracted, error, parse_ns, bytes_in, *keep_cols``.
+    The per-document map kernel selects only the needed columns FIRST
+    so Catalyst prunes the scan to ``url, html`` (+ keep_cols) — at
+    10^12 docs the html blob is the only heavy column we should ever
+    deserialize (SURVEY.md §4.1/§4.2).
     """
-    from goose_parser_spark.deploy import ship_package
-    ship_package(df.sparkSession)
-
     compiled = rules if isinstance(rules, CompiledRules) else RuleCompiler().compile(rules)
-    cols = [url_col, html_col, *keep_cols]
-    pruned = df.select(*dict.fromkeys(cols))
-    schema = output_schema(compiled, url_col=url_col, udf=True)
-    if keep_cols:
-        extra_fields = [pruned.schema[c] for c in keep_cols]
-        schema = StructType(schema.fields + extra_fields)
-    fn = build_arrow_extractor(compiled, html_col=html_col, url_col=url_col,
-                               keep_cols=keep_cols, spark_schema=schema)
-    out = pruned.mapInArrow(fn, schema=schema)
+    extracted = StructField("extracted",
+                            compiled.udf_schema or compiled.schema, True)
+
+    def fn(html):
+        return ((evaluate_document(compiled, html, skip_lowered=True),),)
+
+    out = map_docs(df, fn, [extracted], url_col, html_col, keep=keep_cols,
+                   text=True)
     if compiled.has_lowered:
         # apply the native transform suffixes post-UDF: per-value work
         # Catalyst can run byte-identically stays out of the Python
@@ -228,96 +78,30 @@ def extract_many(
     Output: ``url, extracted (struct of per-tree structs), error,
     parse_ns, bytes_in``. A tree whose evaluation fails yields NULL for
     that tree and a ``tree=<name>: <err>`` entry in ``error`` — one bad
-    ruleset never poisons the other tenants (I4 per-tree isolation).
+    ruleset never poisons the other tenants (I4 per-tree isolation,
+    :func:`evaluate_document_many`).
     """
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from goose_parser_spark.deploy import ship_package
-    from goose_parser_spark.rules.evaluator import evaluate_document_many
-    ship_package(df.sparkSession)
+    from pyspark.sql import functions as F
 
     compiled = {
         name: (r if isinstance(r, CompiledRules) else RuleCompiler().compile(r))
         for name, r in rules_by_name.items()
     }
-    extracted_schema = StructType([
-        StructField(name, c.schema, True) for name, c in compiled.items()
-    ])
-    schema = StructType([
-        StructField(url_col, StringType(), False),
-        StructField("extracted", extracted_schema, True),
-        StructField("error", StringType(), True),
-        StructField("parse_ns", LongType(), True),
-        StructField("bytes_in", LongType(), True),
-    ])
-    out_arrow_schema = to_arrow_schema(schema)
-    names_in_order = list(compiled)
+    fields = [
+        StructField("extracted", StructType([
+            StructField(name, c.schema, True) for name, c in compiled.items()
+        ]), True),
+        StructField("_tree_errors", StringType(), True),
+    ]
 
-    def run(batches):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        from goose_parser_spark.rules.evaluator import (
-            _DocContext, _union_universe, evaluate_branches)
-        from goose_parser_spark.dom.parser import parse_document
+    def fn(html):
+        row, errors = evaluate_document_many(compiled, html)
+        return ((row, "; ".join(errors) or None),)
 
-        universe = _union_universe(compiled.values())
-
-        for batch in batches:
-            cols = batch.schema.names
-            urls = batch.column(cols.index(url_col))
-            hcol = batch.column(cols.index(html_col))
-            n = batch.num_rows
-            if pa.types.is_binary(hcol.type) or pa.types.is_large_binary(hcol.type):
-                lengths = pc.binary_length(hcol).to_pylist()
-                try:
-                    raws = hcol.cast(pa.large_string()).to_pylist()
-                except pa.ArrowInvalid:
-                    raws = [b.decode("utf-8", errors="replace")
-                            if b is not None else None
-                            for b in hcol.to_pylist()]
-            else:
-                raws = hcol.to_pylist()
-                lengths = None
-            extracted: list[object] = [None] * n
-            errors: list[str | None] = [None] * n
-            parse_ns: list[int] = [0] * n
-            bytes_in: list[int] = [0] * n
-            for i in range(n):
-                raw = raws[i]
-                if raw is not None:
-                    bytes_in[i] = lengths[i] if lengths is not None else len(raw)
-                t0 = time.perf_counter_ns()
-                errs: list[str] = []
-                try:
-                    if raw is None:
-                        raise ValueError("html is NULL")
-                    root, elements = parse_document(raw)
-                    doc = _DocContext(root, elements, universe=universe)
-                    row: dict[str, object] = {}
-                    for name in names_in_order:
-                        try:
-                            row[name] = evaluate_branches(
-                                compiled[name].branches, doc)
-                        except Exception as exc:  # noqa: BLE001 — per-tree I4
-                            row[name] = None
-                            errs.append(f"tree={name}: "
-                                        f"{type(exc).__name__}: {exc}")
-                    extracted[i] = row
-                except Exception as exc:  # noqa: BLE001 — I4 isolation
-                    errs.append(f"{type(exc).__name__}: {exc}")
-                if errs:
-                    errors[i] = "; ".join(errs)
-                parse_ns[i] = time.perf_counter_ns() - t0
-            yield pa.RecordBatch.from_arrays([
-                urls,
-                pa.array(extracted,
-                         type=out_arrow_schema.field("extracted").type),
-                pa.array(errors, type=pa.string()),
-                pa.array(parse_ns, type=pa.int64()),
-                pa.array(bytes_in, type=pa.int64()),
-            ], schema=out_arrow_schema)
-
-    pruned = df.select(url_col, html_col)
-    return pruned.mapInArrow(run, schema=schema)
+    out = map_docs(df, fn, fields, url_col, html_col, text=True)
+    return out.select(url_col, "extracted",
+                      F.coalesce("error", "_tree_errors").alias("error"),
+                      "parse_ns", "bytes_in")
 
 
 def _lowered_extracted(compiled: CompiledRules, df: "DataFrame"):

@@ -588,56 +588,29 @@ def brotli_text(df, payload_col: str = "payload", id_col: str = "doc_id",
     distributed as ``.br`` sidecars). One row per input row:
     ``id_col, wbits, content_len, text``; decode failures yield a
     single ``wbits = -1`` row with NULL content (I4 poison isolation
-    — same contract as the media codecs and zstd_text). Arrow-batched
-    mapInPandas; decode is the only Python node, the plan is map-only
-    (no shuffle), and ``max_out`` bounds per-doc inflation so a bomb
-    poisons its row instead of the executor."""
-    from collections.abc import Iterator as _Iter
-
-    import pandas as pd
+    — same contract as the media codecs and zstd_text); NULL payloads
+    yield no rows. Runs on the per-document map kernel
+    (kernel.map_docs); decode is the only Python node, the plan is
+    map-only (no shuffle), and ``max_out`` bounds per-doc inflation so
+    a bomb poisons its row instead of the executor."""
+    from pyspark.sql import functions as F
     from pyspark.sql.types import (
-        IntegerType, LongType, StringType, StructField, StructType)
+        IntegerType, LongType, StringType, StructField)
 
-    from goose_parser_spark.deploy import ship_package
-    ship_package(df.sparkSession)
+    from goose_parser_spark.kernel import map_docs
 
-    out_schema = StructType([
-        df.schema[id_col],
-        StructField("wbits", IntegerType(), False),
-        StructField("content_len", LongType(), True),
-        StructField("text", StringType(), True),
-    ])
+    fields = [StructField("wbits", IntegerType(), True),
+              StructField("content_len", LongType(), True),
+              StructField("text", StringType(), True)]
 
-    def run(batches: "_Iter[pd.DataFrame]") -> "_Iter[pd.DataFrame]":
-        for pdf in batches:
-            cols: dict[str, list] = {k: [] for k in (
-                "_id", "wbits", "content_len", "text")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                if payload is None:
-                    continue
-                try:
-                    content, wbits = decompress_info(
-                        bytes(payload), max_out=max_out)
-                    text = content.decode("utf-8", "replace")
-                except BrotliError:
-                    cols["_id"].append(doc_id)
-                    cols["wbits"].append(-1)
-                    cols["content_len"].append(None)
-                    cols["text"].append(None)
-                    continue
-                cols["_id"].append(doc_id)
-                cols["wbits"].append(wbits)
-                cols["content_len"].append(len(content))
-                cols["text"].append(text)
-            yield pd.DataFrame({
-                id_col: cols["_id"],
-                "wbits": cols["wbits"],
-                "content_len": cols["content_len"],
-                "text": cols["text"],
-            })
+    def fn(payload):
+        content, wbits = decompress_info(payload, max_out=max_out)
+        return ((wbits, len(content), content.decode("utf-8", "replace")),)
 
-    return (df.select(id_col, payload_col)
-            .mapInPandas(run, schema=out_schema))
+    out = map_docs(df, fn, fields, id_col, payload_col).where(
+        F.col("bytes_in").isNotNull())
+    return out.select(id_col, F.coalesce("wbits", F.lit(-1)).alias("wbits"),
+                      "content_len", "text")
 
 
 def is_brotli_plausible(data: bytes) -> bool:

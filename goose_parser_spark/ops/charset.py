@@ -16,10 +16,11 @@ browser sniffing ladder (WHATWG encoding standard, public spec):
    ``unicode_escape``…).
 4. Fallback windows-1252 (the browser default that never fails).
 
-Decoding runs Arrow-batched via mapInArrow — per-document Python by
-nature (same sanctioned profile as the extraction/codec paths), map-
-only, no shuffle. Undecodable sequences are replaced, and the
-replacement count is surfaced so quality filters can gate on it.
+Decoding runs on the per-document map kernel (kernel.map_docs) —
+per-document Python by nature (same sanctioned profile as the
+extraction/codec paths), map-only, no shuffle. Undecodable sequences
+are replaced, and the replacement count is surfaced so quality
+filters can gate on it.
 """
 
 from __future__ import annotations
@@ -27,9 +28,10 @@ from __future__ import annotations
 import re
 from typing import TYPE_CHECKING
 
-from pyspark.sql.types import (
-    IntegerType, StringType, StructField, StructType,
-)
+from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StringType, StructField
+
+from goose_parser_spark.kernel import map_docs
 
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import DataFrame
@@ -94,46 +96,13 @@ def decode_html_bytes(
     id_col: str = "doc_id",
 ) -> "DataFrame":
     """Raw crawl bodies → ``(id, text, charset, n_replaced)``.
-    Map-only mapInArrow; NULL payloads yield NULL text with charset
-    ``'null'`` (countable, never fatal — I4)."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    from goose_parser_spark.deploy import ship_package
-
-    ship_package(df.sparkSession)
-    out_schema = StructType([
-        df.schema[id_col],
-        StructField("text", StringType(), True),
-        StructField("charset", StringType(), False),
-        StructField("n_replaced", IntegerType(), False),
-    ])
-    arrow_schema = to_arrow_schema(out_schema)
-
-    def run(batches):
-        import pyarrow as pa
-        for batch in batches:
-            names = batch.schema.names
-            ids = batch.column(names.index(id_col))
-            payloads = batch.column(names.index(payload_col)).to_pylist()
-            texts: list[str | None] = []
-            charsets: list[str] = []
-            repl: list[int] = []
-            for p in payloads:
-                if p is None:
-                    texts.append(None)
-                    charsets.append("null")
-                    repl.append(0)
-                    continue
-                t, c, n = sniff_decode(bytes(p))
-                texts.append(t)
-                charsets.append(c)
-                repl.append(n)
-            yield pa.RecordBatch.from_arrays([
-                ids,
-                pa.array(texts, type=pa.string()),
-                pa.array(charsets, type=pa.string()),
-                pa.array(repl, type=pa.int32()),
-            ], schema=arrow_schema)
-
-    return df.select(id_col, payload_col).mapInArrow(
-        run, schema=out_schema)
+    Map-only (kernel.map_docs); NULL or undecodable payloads yield
+    NULL text with charset ``'null'`` (countable, never fatal — I4)."""
+    fields = [StructField("text", StringType(), True),
+              StructField("charset", StringType(), True),
+              StructField("n_replaced", IntegerType(), True)]
+    out = map_docs(df, lambda p: (sniff_decode(p),), fields, id_col,
+                   payload_col)
+    return out.select(id_col, "text",
+                      F.coalesce("charset", F.lit("null")).alias("charset"),
+                      F.coalesce("n_replaced", F.lit(0)).alias("n_replaced"))

@@ -110,54 +110,29 @@ def mbox_messages(df: "DataFrame", payload_col: str = "payload",
     ``id_col, msg_no, subject, from_addr, date, body``. A document
     that is not an mbox yields the single ``msg_no = -1`` poison
     row; an individual unparseable message yields its NULL-body row.
-    Map-only Arrow-batched mapInPandas (MIME decode is per-document
-    string work); mbox bytes never shuffle."""
-    import pandas as pd
+    Map-only (kernel.map_docs — MIME decode is per-document string
+    work); mbox bytes never shuffle; NULL payloads yield no rows."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import IntegerType, StringType, StructField
 
-    from pyspark.sql.types import (
-        IntegerType, StringType, StructField, StructType,
-    )
+    from goose_parser_spark.kernel import map_docs
 
-    from goose_parser_spark.deploy import ship_package
-    ship_package(df.sparkSession)
-    out_schema = StructType([
-        df.schema[id_col],
-        StructField("msg_no", IntegerType(), False),
-        StructField("subject", StringType(), True),
-        StructField("from_addr", StringType(), True),
-        StructField("date", StringType(), True),
-        StructField("body", StringType(), True),
-    ])
     names = ("subject", "from_addr", "date", "body")
+    fields = [StructField("msg_no", IntegerType(), True),
+              *(StructField(k, StringType(), True) for k in names)]
 
-    def run(batches):
-        for pdf in batches:
-            cols: dict[str, list] = {"_id": [], "msg_no": []}
-            for k in names:
-                cols[k] = []
+    def fn(payload):
+        rows = []
+        for no, raw in enumerate(iter_mbox(payload)):
+            try:
+                rec = parse_email(raw)
+            except Exception:  # noqa: BLE001 — per-msg I4
+                rec = {}
+            rows.append((no, *(rec.get(k) for k in names)))
+        return rows
 
-            def emit(pid, no, rec):
-                cols["_id"].append(pid)
-                cols["msg_no"].append(no)
-                for k in names:
-                    cols[k].append(rec.get(k))
-
-            for pid, payload in zip(pdf[id_col], pdf[payload_col]):
-                if payload is None:
-                    continue
-                try:
-                    msgs = list(iter_mbox(bytes(payload)))
-                except ValueError:
-                    emit(pid, -1, {})
-                    continue
-                for no, raw in enumerate(msgs):
-                    try:
-                        emit(pid, no, parse_email(raw))
-                    except Exception:  # noqa: BLE001 — per-msg I4
-                        emit(pid, no, {})
-            out = pd.DataFrame(cols)
-            out.columns = [id_col] + list(out.columns[1:])
-            yield out
-
-    return df.select(id_col, payload_col).mapInPandas(
-        run, schema=out_schema)
+    out = map_docs(df, fn, fields, id_col, payload_col).where(
+        F.col("bytes_in").isNotNull())
+    return out.select(id_col,
+                      F.coalesce("msg_no", F.lit(-1)).alias("msg_no"),
+                      *names)

@@ -134,44 +134,24 @@ def epub_chapters(df: "DataFrame", payload_col: str = "payload",
     EPUB at all yields the single ``chapter_no = -1`` poison row
     (same I4 convention as extract_pdf_pages); an individual broken
     chapter yields its NULL-text row while the rest of the book
-    extracts. Map-only Arrow-batched mapInPandas — the zip walk +
-    DOM parse is the sanctioned per-document Python point; book
-    bytes never shuffle."""
-    import pandas as pd
+    extracts. Map-only (kernel.map_docs) — the zip walk + DOM parse
+    is the sanctioned per-document Python point; book bytes never
+    shuffle; NULL payloads yield no rows."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import IntegerType, StringType, StructField
 
-    from pyspark.sql.types import (
-        IntegerType, StringType, StructField, StructType,
-    )
+    from goose_parser_spark.kernel import map_docs
 
-    from goose_parser_spark.deploy import ship_package
-    ship_package(df.sparkSession)
-    out_schema = StructType([
-        df.schema[id_col],
-        StructField("chapter_no", IntegerType(), False),
-        StructField("href", StringType(), True),
-        StructField("text", StringType(), True),
-    ])
+    fields = [StructField("chapter_no", IntegerType(), True),
+              StructField("href", StringType(), True),
+              StructField("text", StringType(), True)]
 
-    def run(batches):
-        for pdf in batches:
-            cols: dict[str, list] = {"_id": [], "chapter_no": [],
-                                     "href": [], "text": []}
-            for pid, payload in zip(pdf[id_col], pdf[payload_col]):
-                if payload is None:
-                    continue
-                try:
-                    chapters = parse_epub(bytes(payload))
-                except Exception:  # noqa: BLE001 — per-doc I4
-                    chapters = [{"chapter_no": -1, "href": None,
-                                 "text": None}]
-                for ch in chapters:
-                    cols["_id"].append(pid)
-                    cols["chapter_no"].append(ch["chapter_no"])
-                    cols["href"].append(ch["href"])
-                    cols["text"].append(ch["text"])
-            out = pd.DataFrame(cols)
-            out.columns = [id_col] + list(out.columns[1:])
-            yield out
+    def fn(payload):
+        return [(ch["chapter_no"], ch["href"], ch["text"])
+                for ch in parse_epub(payload)]
 
-    return df.select(id_col, payload_col).mapInPandas(
-        run, schema=out_schema)
+    out = map_docs(df, fn, fields, id_col, payload_col).where(
+        F.col("bytes_in").isNotNull())
+    return out.select(id_col,
+                      F.coalesce("chapter_no", F.lit(-1)).alias("chapter_no"),
+                      "href", "text")

@@ -218,46 +218,23 @@ def latex_to_text(s: str) -> str:
 
 def latex_clean(df: "DataFrame", text_col: str = "tex",
                 id_col: str = "doc_id") -> "DataFrame":
-    """LaTeX → plain text at corpus scale: map-only Arrow-batched
-    mapInPandas (per-document string work), one row per input with
-    ``clean_text`` and ``n_math`` (count of dropped inline-math
-    spans — a domain signal: heavy-math sources need different
+    """LaTeX → plain text at corpus scale: map-only per-document string
+    work on the map kernel (kernel.map_docs), one row per non-NULL
+    input with ``clean_text`` and ``n_math`` (count of dropped inline-
+    math spans — a domain signal: heavy-math sources need different
     tokenizer budgets). NULL clean_text on failure (I4)."""
-    import pandas as pd
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import IntegerType, StringType, StructField
 
-    from pyspark.sql.types import (
-        IntegerType, StringType, StructField, StructType,
-    )
+    from goose_parser_spark.kernel import map_docs
 
-    from goose_parser_spark.deploy import ship_package
-    ship_package(df.sparkSession)
-    out_schema = StructType([
-        df.schema[id_col],
-        StructField("clean_text", StringType(), True),
-        StructField("n_math", IntegerType(), True),
-    ])
+    fields = [StructField("clean_text", StringType(), True),
+              StructField("n_math", IntegerType(), True)]
 
-    def run(batches):
-        for pdf in batches:
-            ids: list = []
-            texts: list = []
-            maths: list = []
-            for pid, tex in zip(pdf[id_col], pdf[text_col]):
-                if tex is None:
-                    continue
-                ids.append(pid)
-                try:
-                    t = str(tex)
-                    texts.append(latex_to_text(t))
-                    maths.append(len(re.findall(
-                        r"(?<!\\)\$(?:[^$\\]|\\.)+\$", t)))
-                except Exception:  # noqa: BLE001 — I4 isolation
-                    texts.append(None)
-                    maths.append(None)
-            out = pd.DataFrame({"_id": ids, "clean_text": texts,
-                                "n_math": maths})
-            out.columns = [id_col] + list(out.columns[1:])
-            yield out
+    def fn(tex):
+        n_math = len(re.findall(r"(?<!\\)\$(?:[^$\\]|\\.)+\$", tex))
+        return ((latex_to_text(tex), n_math),)
 
-    return df.select(id_col, text_col).mapInPandas(
-        run, schema=out_schema)
+    out = map_docs(df, fn, fields, id_col, text_col, text=True).where(
+        F.col("bytes_in").isNotNull())
+    return out.select(id_col, "clean_text", "n_math")

@@ -30,12 +30,12 @@ from __future__ import annotations
 
 import re
 import zlib
-from collections.abc import Iterator
 from typing import TYPE_CHECKING
 
-import pandas as pd
+from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StringType, StructField
 
-from pyspark.sql.types import IntegerType, LongType, StringType, StructField, StructType
+from goose_parser_spark.kernel import map_docs
 
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import DataFrame
@@ -891,54 +891,27 @@ def extract_pdf_pages(
     Per-document failure isolation (I4): a document whose parse raises
     contributes one row with ``page_no = -1`` and NULL text — poison
     never kills the batch, and failures stay countable downstream.
+    NULL payloads yield no rows.
 
-    The explode happens inside the Python worker (a parsed page list
-    never crosses the boundary twice); output rows are narrow.
+    Runs on the per-document map kernel (kernel.map_docs): the explode
+    happens inside the Python worker (a parsed page list never crosses
+    the boundary twice); output rows are narrow.
     """
-    from goose_parser_spark.deploy import ship_package
-    ship_package(df.sparkSession)
+    fields = [StructField("page_no", IntegerType(), True),
+              StructField("page_text", StringType(), True),
+              StructField("n_pages", IntegerType(), True)]
 
-    out_schema = StructType([
-        df.schema[id_col],
-        StructField("page_no", IntegerType(), False),
-        StructField("page_text", StringType(), True),
-        StructField("n_pages", IntegerType(), False),
-    ])
+    def fn(raw):
+        pages = (parse_pdf_text(raw) if raw.startswith(b"%PDF-")
+                 else parse_pdf_stub(raw))
+        return [(pno, ptext, len(pages)) for pno, ptext in enumerate(pages)]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids: list[object] = []
-            page_nos: list[int] = []
-            texts: list[str] = []
-            n_pages_col: list[int] = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                if payload is None:
-                    continue
-                raw = bytes(payload)
-                try:
-                    if raw.startswith(b"%PDF-"):
-                        pages = parse_pdf_text(raw)
-                    else:
-                        pages = parse_pdf_stub(raw)
-                except Exception:  # noqa: BLE001 — I4 poison isolation
-                    ids.append(doc_id)
-                    page_nos.append(-1)
-                    texts.append(None)
-                    n_pages_col.append(0)
-                    continue
-                for pno, ptext in enumerate(pages):
-                    ids.append(doc_id)
-                    page_nos.append(pno)
-                    texts.append(ptext)
-                    n_pages_col.append(len(pages))
-            yield pd.DataFrame({
-                id_col: pd.Series(ids),
-                "page_no": pd.Series(page_nos, dtype="int32"),
-                "page_text": pd.Series(texts, dtype="object"),
-                "n_pages": pd.Series(n_pages_col, dtype="int32"),
-            })
-
-    return df.select(id_col, payload_col).mapInPandas(run, schema=out_schema)
+    out = map_docs(df, fn, fields, id_col, payload_col).where(
+        F.col("bytes_in").isNotNull())
+    return out.select(id_col,
+                      F.coalesce("page_no", F.lit(-1)).alias("page_no"),
+                      "page_text",
+                      F.coalesce("n_pages", F.lit(0)).alias("n_pages"))
 
 
 # ---------------------------------------------------------------------------
@@ -1047,53 +1020,22 @@ def pdf_metadata(
 ) -> "DataFrame":
     """Binary PDF payloads → one metadata row per document:
     ``(id, n_pages, title, author, subject, producer, created,
-    error)``. Map-only mapInPandas, per-document poison isolation
-    (I4): a failing parse yields n_pages = -1 and the error string."""
-    from goose_parser_spark.deploy import ship_package
-    ship_package(df.sparkSession)
+    error)``. Map-only (kernel.map_docs), per-document poison
+    isolation (I4): a failing parse yields n_pages = -1 and the error
+    string; NULL payloads yield no rows."""
+    names = ("title", "author", "subject", "producer", "created")
+    fields = [StructField("n_pages", IntegerType(), True),
+              *(StructField(k, StringType(), True) for k in names)]
 
-    out_schema = StructType([
-        df.schema[id_col],
-        StructField("n_pages", IntegerType(), False),
-        StructField("title", StringType(), True),
-        StructField("author", StringType(), True),
-        StructField("subject", StringType(), True),
-        StructField("producer", StringType(), True),
-        StructField("created", StringType(), True),
-        StructField("error", StringType(), True),
-    ])
+    def fn(payload):
+        info = parse_pdf_info(payload)
+        return ((info["n_pages"], *(info[k] for k in names)),)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in (
-                id_col, "n_pages", "title", "author", "subject",
-                "producer", "created", "error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                if payload is None:
-                    continue
-                rows[id_col].append(doc_id)
-                try:
-                    info = parse_pdf_info(bytes(payload))
-                    rows["n_pages"].append(info["n_pages"])
-                    for k in ("title", "author", "subject", "producer",
-                              "created"):
-                        rows[k].append(info[k])
-                    rows["error"].append(None)
-                except Exception as exc:  # noqa: BLE001 — I4 isolation
-                    rows["n_pages"].append(-1)
-                    for k in ("title", "author", "subject", "producer",
-                              "created"):
-                        rows[k].append(None)
-                    rows["error"].append(f"{type(exc).__name__}: {exc}")
-            yield pd.DataFrame({
-                id_col: pd.Series(rows[id_col]),
-                "n_pages": pd.Series(rows["n_pages"], dtype="int32"),
-                **{k: pd.Series(rows[k], dtype="object")
-                   for k in ("title", "author", "subject", "producer",
-                             "created", "error")},
-            })
-
-    return df.select(id_col, payload_col).mapInPandas(run, schema=out_schema)
+    out = map_docs(df, fn, fields, id_col, payload_col).where(
+        F.col("bytes_in").isNotNull())
+    return out.select(id_col,
+                      F.coalesce("n_pages", F.lit(-1)).alias("n_pages"),
+                      *names, "error")
 
 
 def pdf_images(
@@ -1112,71 +1054,41 @@ def pdf_images(
     extract_pdf_pages).
 
     100-TB shape: the parse+decode is the only Python node, map-only
-    Arrow-batched mapInPandas — payload bytes never shuffle; the DCT
-    hash is pure Catalyst downstream."""
-    from goose_parser_spark.deploy import ship_package
-    from goose_parser_spark.ops.multimodal import _phash_from_pixel_cols
-    ship_package(df.sparkSession)
+    on the per-document map kernel (kernel.map_docs) — payload bytes
+    never shuffle; the DCT hash is pure Catalyst downstream. NULL
+    payloads yield no rows."""
     from pyspark.sql.types import BooleanType
 
-    grid_schema = StructType(
-        [df.schema[id_col],
-         StructField("image_no", IntegerType(), False),
-         StructField("width", IntegerType(), True),
-         StructField("height", IntegerType(), True),
-         StructField("fmt", StringType(), True),
-         StructField("_ok", BooleanType(), False)]
-        + [StructField(f"_p{k}", IntegerType(), True)
-           for k in range(64)])
+    from goose_parser_spark.ops.multimodal import (
+        PIXEL_FIELDS, PIXELS, _phash_from_pixel_cols)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    fields = [StructField("image_no", IntegerType(), True),
+              StructField("width", IntegerType(), True),
+              StructField("height", IntegerType(), True),
+              StructField("fmt", StringType(), True),
+              StructField("_ok", BooleanType(), True),
+              *PIXEL_FIELDS]
+
+    def fn(payload):
         from goose_parser_spark.ops.imagecodec import resize_gray_box
-        zeros = [0] * 64
-        for pdf in batches:
-            cols: dict[str, list] = {"_id": [], "image_no": [],
-                                     "width": [], "height": [],
-                                     "fmt": [], "_ok": []}
-            for k in range(64):
-                cols[f"_p{k}"] = []
+        rows = []
+        for img in parse_pdf_images(payload):
+            head = (img["image_no"], img["width"], img["height"], img["fmt"])
+            try:
+                if img["pixels"] is None:
+                    raise ValueError("undecodable image")
+                rows.append((*head, True, *resize_gray_box(
+                    img["width"], img["height"], img["pixels"])))
+            except Exception:  # noqa: BLE001 — per-image I4
+                rows.append((*head, False, *[0] * 64))
+        return rows
 
-            def emit(doc_id, no, w, h, fmt, ok, grid):
-                cols["_id"].append(doc_id)
-                cols["image_no"].append(no)
-                cols["width"].append(w)
-                cols["height"].append(h)
-                cols["fmt"].append(fmt)
-                cols["_ok"].append(ok)
-                for k in range(64):
-                    cols[f"_p{k}"].append(grid[k])
-
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                if payload is None:
-                    continue
-                try:
-                    images = parse_pdf_images(bytes(payload))
-                except Exception:  # noqa: BLE001 — per-doc I4
-                    emit(doc_id, -1, None, None, None, False, zeros)
-                    continue
-                for img in images:
-                    px = img["pixels"]
-                    if px is None:
-                        emit(doc_id, img["image_no"], img["width"],
-                             img["height"], img["fmt"], False, zeros)
-                        continue
-                    try:
-                        grid = resize_gray_box(
-                            img["width"], img["height"], px)
-                        emit(doc_id, img["image_no"], img["width"],
-                             img["height"], img["fmt"], True, grid)
-                    except Exception:  # noqa: BLE001 — per-image I4
-                        emit(doc_id, img["image_no"], img["width"],
-                             img["height"], img["fmt"], False, zeros)
-            out = pd.DataFrame(cols)
-            out.columns = [id_col] + list(out.columns[1:])
-            yield out
-
-    base = df.select(id_col, payload_col).mapInPandas(
-        run, schema=grid_schema)
+    out = map_docs(df, fn, fields, id_col, payload_col).where(
+        F.col("bytes_in").isNotNull())
+    base = out.select(
+        id_col, F.coalesce("image_no", F.lit(-1)).alias("image_no"),
+        "width", "height", "fmt",
+        F.coalesce("_ok", F.lit(False)).alias("_ok"), *PIXELS)
     return _phash_from_pixel_cols(
         base, id_col, "phash", valid_col="_ok",
         extra_cols=("image_no", "width", "height", "fmt"))

@@ -16,21 +16,24 @@ lives inside <a> descendants, and ``class_weight`` down-weights
 candidates whose class/id match boilerplate patterns (nav, footer,
 sidebar, ad, …) and up-weights content-ish names (article, content,
 main, post, body). Deepest-wins on ties so a page wrapper never beats
-the article it contains. Runs Arrow-batched via mapInArrow — same
-execution profile as the rule-tree extractor (map-only, no shuffle).
+the article it contains. Runs on the per-document map kernel
+(kernel.map_docs) — same execution profile as the rule-tree extractor
+(map-only, no shuffle).
 """
 
 from __future__ import annotations
 
 import re
-import time
+import sys
 from typing import TYPE_CHECKING
 
+from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    DoubleType, LongType, StringType, StructField, StructType,
+    BooleanType, DoubleType, IntegerType, StringType, StructField,
 )
 
 from goose_parser_spark.dom.parser import Element, parse_html
+from goose_parser_spark.kernel import map_docs
 
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import DataFrame
@@ -134,54 +137,17 @@ def extract_main_content(
     """Boilerplate-strip over a pages DataFrame.
 
     Output: ``url, main_text, content_score, parse_ns, error``. Same
-    scale profile as the rule extractor: column-pruned scan →
-    mapInArrow → no shuffle.
+    scale profile as the rule extractor: column-pruned scan → the
+    per-document map kernel (kernel.map_docs) → no shuffle. A poison
+    page scores 0.0 and carries its ``error``.
     """
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from goose_parser_spark.deploy import ship_package
-
-    ship_package(df.sparkSession)
-
-    out_schema = StructType([
-        StructField(url_col, StringType(), False),
-        StructField("main_text", StringType(), True),
-        StructField("content_score", DoubleType(), True),
-        StructField("parse_ns", LongType(), True),
-        StructField("error", StringType(), True),
-    ])
-    arrow_schema = to_arrow_schema(out_schema)
-
-    def run(batches):
-        import pyarrow as pa
-        for batch in batches:
-            names = batch.schema.names
-            urls = batch.column(names.index(url_col))
-            raws = batch.column(names.index(html_col)).to_pylist()
-            n = batch.num_rows
-            texts: list[str | None] = [None] * n
-            scores: list[float] = [0.0] * n
-            parse_ns: list[int] = [0] * n
-            errors: list[str | None] = [None] * n
-            for i in range(n):
-                t0 = time.perf_counter_ns()
-                try:
-                    raw = raws[i]
-                    if raw is None:
-                        raise ValueError("html is NULL")
-                    texts[i], scores[i] = main_content(raw)
-                except Exception as exc:  # noqa: BLE001 — I4 isolation
-                    errors[i] = f"{type(exc).__name__}: {exc}"
-                parse_ns[i] = time.perf_counter_ns() - t0
-            yield pa.RecordBatch.from_arrays([
-                urls,
-                pa.array(texts, type=pa.string()),
-                pa.array(scores, type=pa.float64()),
-                pa.array(parse_ns, type=pa.int64()),
-                pa.array(errors, type=pa.string()),
-            ], schema=arrow_schema)
-
-    pruned = df.select(url_col, html_col)
-    return pruned.mapInArrow(run, schema=out_schema)
+    fields = [StructField("main_text", StringType(), True),
+              StructField("content_score", DoubleType(), True)]
+    out = map_docs(df, lambda html: (main_content(html),), fields,
+                   url_col, html_col, text=True)
+    return out.select(url_col, "main_text",
+                      F.coalesce("content_score", F.lit(0.0))
+                      .alias("content_score"), "parse_ns", "error")
 
 
 # ---------------------------------------------------------------------------
@@ -300,21 +266,8 @@ def extract_markdown(
     url_col: str = "url",
 ) -> "DataFrame":
     """HTML→Markdown over a pages DataFrame: ``url, markdown, error``.
-    Same map-only Arrow-batched profile as the other extractors."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from goose_parser_spark.deploy import ship_package
-
-    ship_package(df.sparkSession)
-    out_schema = StructType([
-        StructField(url_col, StringType(), False),
-        StructField("markdown", StringType(), True),
-        StructField("error", StringType(), True),
-    ])
-    arrow_schema = to_arrow_schema(out_schema)
-
-    def run(batches):
-        import pyarrow as pa
-        import sys
+    Same map-only profile as the other extractors (kernel.map_docs)."""
+    def fn(html):
         # the markdown walker recurses per nesting level (direct
         # Python-to-Python calls — 3.11 keeps those off the C stack);
         # the default ~1000 limit would poison legitimately deep
@@ -322,27 +275,11 @@ def extract_markdown(
         # bounds a hostile 400k-deep page to a clean per-doc error
         if sys.getrecursionlimit() < 30_000:
             sys.setrecursionlimit(30_000)
-        for batch in batches:
-            names = batch.schema.names
-            urls = batch.column(names.index(url_col))
-            raws = batch.column(names.index(html_col)).to_pylist()
-            n = batch.num_rows
-            mds: list[str | None] = [None] * n
-            errors: list[str | None] = [None] * n
-            for i in range(n):
-                try:
-                    if raws[i] is None:
-                        raise ValueError("html is NULL")
-                    mds[i] = html_to_markdown(raws[i])
-                except Exception as exc:  # noqa: BLE001 — I4 isolation
-                    errors[i] = f"{type(exc).__name__}: {exc}"
-            yield pa.RecordBatch.from_arrays([
-                urls,
-                pa.array(mds, type=pa.string()),
-                pa.array(errors, type=pa.string()),
-            ], schema=arrow_schema)
+        return ((html_to_markdown(html),),)
 
-    return df.select(url_col, html_col).mapInArrow(run, schema=out_schema)
+    out = map_docs(df, fn, [StructField("markdown", StringType(), True)],
+                   url_col, html_col, text=True)
+    return out.select(url_col, "markdown", "error")
 
 
 # ---------------------------------------------------------------------------
@@ -405,64 +342,16 @@ def extract_tables(
     """Table extraction over a pages DataFrame: one output row per
     <tr> — ``url, table_no, row_no, is_header, n_cols, cells`` (cells
     tab-joined; ``error`` carries per-page failures, I4)."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import BooleanType, IntegerType
+    fields = [StructField("table_no", IntegerType(), True),
+              StructField("row_no", IntegerType(), True),
+              StructField("is_header", BooleanType(), True),
+              StructField("n_cols", IntegerType(), True),
+              StructField("cells", StringType(), True)]
 
-    from goose_parser_spark.deploy import ship_package
+    def fn(html):
+        return [(tno, rno, hdr, len(cells), "\t".join(cells))
+                for tno, rno, hdr, cells in html_tables(html)]
 
-    ship_package(df.sparkSession)
-    out_schema = StructType([
-        StructField(url_col, StringType(), False),
-        StructField("table_no", IntegerType(), True),
-        StructField("row_no", IntegerType(), True),
-        StructField("is_header", BooleanType(), True),
-        StructField("n_cols", IntegerType(), True),
-        StructField("cells", StringType(), True),
-        StructField("error", StringType(), True),
-    ])
-    arrow_schema = to_arrow_schema(out_schema)
-
-    def run(batches):
-        import pyarrow as pa
-        for batch in batches:
-            names = batch.schema.names
-            urls = batch.column(names.index(url_col)).to_pylist()
-            raws = batch.column(names.index(html_col)).to_pylist()
-            o_url: list[str] = []
-            o_tno: list[int | None] = []
-            o_rno: list[int | None] = []
-            o_hdr: list[bool | None] = []
-            o_nc: list[int | None] = []
-            o_cells: list[str | None] = []
-            o_err: list[str | None] = []
-            for url, raw in zip(urls, raws):
-                try:
-                    if raw is None:
-                        raise ValueError("html is NULL")
-                    for tno, rno, hdr, cells in html_tables(raw):
-                        o_url.append(url)
-                        o_tno.append(tno)
-                        o_rno.append(rno)
-                        o_hdr.append(hdr)
-                        o_nc.append(len(cells))
-                        o_cells.append("\t".join(cells))
-                        o_err.append(None)
-                except Exception as exc:  # noqa: BLE001 — I4 isolation
-                    o_url.append(url)
-                    o_tno.append(None)
-                    o_rno.append(None)
-                    o_hdr.append(None)
-                    o_nc.append(None)
-                    o_cells.append(None)
-                    o_err.append(f"{type(exc).__name__}: {exc}")
-            yield pa.RecordBatch.from_arrays([
-                pa.array(o_url, type=pa.string()),
-                pa.array(o_tno, type=pa.int32()),
-                pa.array(o_rno, type=pa.int32()),
-                pa.array(o_hdr, type=pa.bool_()),
-                pa.array(o_nc, type=pa.int32()),
-                pa.array(o_cells, type=pa.string()),
-                pa.array(o_err, type=pa.string()),
-            ], schema=arrow_schema)
-
-    return df.select(url_col, html_col).mapInArrow(run, schema=out_schema)
+    out = map_docs(df, fn, fields, url_col, html_col, text=True)
+    return out.select(url_col, "table_no", "row_no", "is_header", "n_cols",
+                      "cells", "error")

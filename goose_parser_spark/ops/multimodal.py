@@ -1,9 +1,10 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata.
 
 Images/audio/video travel as ``binary`` columns with a metadata
-struct; decode / feature-extract / resize / frame-sample run as
-Arrow-batched ``mapInPandas`` so payload bytes cross the JVM↔Python
-boundary once per batch.
+struct; decode / feature-extract / resize / frame-sample run on the
+per-document map kernel (kernel.map_docs, one Arrow-batched
+``mapInArrow``) so payload bytes cross the JVM↔Python boundary once
+per batch.
 
 Codec status: PNG / GIF / TIFF / BMP / binary PPM-PGM / JPEG
 (baseline + progressive) / lossless WebP (VP8L) image decode,
@@ -30,14 +31,15 @@ from __future__ import annotations
 
 import hashlib
 import math
-from collections.abc import Iterator
-
-import pandas as pd
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
-    ArrayType, FloatType, LongType, StringType, StructField, StructType,
+    ArrayType, FloatType, IntegerType, LongType, StringType, StructField,
+    StructType,
 )
+
+from goose_parser_spark.kernel import map_docs
 
 MEDIA_META_SCHEMA = StructType([
     StructField("media_type", StringType(), True),   # image|audio|video
@@ -99,6 +101,10 @@ def phash_stub(payload_col: str | F.Column, bits: int = 60) -> F.Column:
 
 FEATURES_FIELD = StructField("features", ArrayType(FloatType()), True)
 
+# the 8x8 grayscale grid a decoder hands the Catalyst pHash chain
+PIXELS = [f"_p{k}" for k in range(64)]
+PIXEL_FIELDS = [StructField(p, IntegerType(), True) for p in PIXELS]
+
 
 def extract_features(
     df: DataFrame,
@@ -106,33 +112,18 @@ def extract_features(
     id_col: str = "doc_id",
     batch_feature_dim: int = 8,
 ) -> DataFrame:
-    """Arrow-batched feature extraction over binary payloads.
+    """Feature extraction over binary payloads on the per-document map
+    kernel (kernel.map_docs): the only per-document Python is the
+    decode of each opaque byte blob (unavoidable for codecs).
 
-    Output: ``id_col, n_bytes, features: array<float>``. The UDF sees
-    whole Arrow batches; per-batch it vectorizes what it can and loops
-    only over the opaque byte blobs (unavoidable for codecs).
+    Output: ``id_col, n_bytes, features: array<float>``; a NULL or
+    undecodable payload yields NULL features (I4).
     """
-    from goose_parser_spark.deploy import ship_package
-    ship_package(df.sparkSession)
-
-    out_schema = StructType([
-        df.schema[id_col],
-        StructField("n_bytes", LongType(), False),
-        FEATURES_FIELD,
-    ])
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = pdf[payload_col]
-            yield pd.DataFrame({
-                id_col: pdf[id_col].reset_index(drop=True),
-                "n_bytes": payloads.map(lambda b: len(b) if b is not None else 0)
-                                   .astype("int64"),
-                "features": payloads.map(
-                    lambda b: decode_stub(bytes(b)) if b is not None else None),
-            })
-
-    return df.select(id_col, payload_col).mapInPandas(run, schema=out_schema)
+    out = map_docs(df, lambda b: ((decode_stub(b),),), [FEATURES_FIELD],
+                   id_col, payload_col)
+    return out.select(id_col,
+                      F.coalesce("bytes_in", F.lit(0)).alias("n_bytes"),
+                      "features")
 
 
 # ---------------------------------------------------------------------------
@@ -268,9 +259,13 @@ def _phash_from_pixel_cols(base: DataFrame, id_col: str, out_col: str,
     # Double.parseDouble(Double.toString(x)) == x for every finite
     # double (Java spec round-trip guarantee), so the value is
     # untouched; cost is one reflective call per row on a stage doing
-    # ~10^3 arithmetic ops per row.
-    barrier = ("CAST(java_method('java.lang.Double', 'parseDouble', "
-               "CAST({v} AS STRING)) AS DOUBLE)")
+    # ~10^3 arithmetic ops per row. NULL passes through: the IF keeps
+    # parseDouble from ever seeing NULL (it throws, and the reflective
+    # call would fail the task), so a NULL payload or jitter degrades
+    # to a NULL pixel instead of killing the job (I4).
+    barrier = ("IF({v} IS NULL, CAST(NULL AS DOUBLE), "
+               "CAST(java_method('java.lang.Double', 'parseDouble', "
+               "CAST(coalesce({v}, 0.0D) AS STRING)) AS DOUBLE))")
     # separable DCT: G[u][y] = sum_x C[u][x] * p[x][y]
     px = ("array(" + ",".join(
         barrier.format(v="CAST(_p0 AS DOUBLE)") if k == 0
@@ -316,50 +311,25 @@ def phash_image(
     """pHash over REAL image decode: PNG / GIF / TIFF / BMP / binary
     PPM-PGM / JPEG / WebP (VP8L and lossy VP8) payloads are decoded
     with the pure-stdlib codecs in ops/imagecodec.py, box-averaged
-    to the 8x8 grayscale grid inside an Arrow-batched mapInPandas
-    (the sanctioned per-document Python point — bytes cross the
-    boundary once per batch), and the grid feeds the SAME Catalyst
-    DCT/median/bit pipeline as :func:`phash_dct`. Undecodable
+    to the 8x8 grayscale grid on the per-document map kernel
+    (kernel.map_docs — the sanctioned per-document Python point; bytes
+    cross the boundary once per batch), and the grid feeds the SAME
+    Catalyst DCT/median/bit pipeline as :func:`phash_dct`. Undecodable
     payloads (AVIF, truncated files) yield a NULL hash instead of
-    failing the batch (I4).
+    failing the batch (I4); NULL payloads yield no rows.
 
     Columns: ``id_col, out_col`` (60-bit long; NULL = decode failed).
     """
-    from goose_parser_spark.deploy import ship_package
-    ship_package(df.sparkSession)
-    from pyspark.sql.types import IntegerType
-
-    from pyspark.sql.types import BooleanType
-
-    grid_schema = StructType(
-        [df.schema[id_col], StructField("_ok", BooleanType(), False)]
-        + [StructField(f"_p{k}", IntegerType(), True) for k in range(64)])
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def fn(payload):
         from goose_parser_spark.ops.imagecodec import (
             decode_image_gray, resize_gray_box)
-        for pdf in batches:
-            cols: dict[str, list] = {id_col: [], "_ok": []}
-            for k in range(64):
-                cols[f"_p{k}"] = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                if payload is None:
-                    continue
-                try:
-                    w, h, px = decode_image_gray(bytes(payload))
-                    grid = resize_gray_box(w, h, px)
-                    ok = True
-                except Exception:  # noqa: BLE001 — I4 poison isolation
-                    grid = [0] * 64
-                    ok = False
-                cols[id_col].append(doc_id)
-                cols["_ok"].append(ok)
-                for k in range(64):
-                    cols[f"_p{k}"].append(grid[k])
-            yield pd.DataFrame(cols)
+        w, h, px = decode_image_gray(payload)
+        return (tuple(resize_gray_box(w, h, px)),)
 
-    base = df.select(id_col, payload_col).mapInPandas(
-        decode, schema=grid_schema)
+    out = map_docs(df, fn, PIXEL_FIELDS, id_col, payload_col).where(
+        F.col("bytes_in").isNotNull())
+    base = out.select(id_col, F.col("error").isNull().alias("_ok"),
+                      *PIXELS)
     return _phash_from_pixel_cols(base, id_col, out_col, valid_col="_ok")
 
 
@@ -391,91 +361,63 @@ def video_frames(
     out_col``. Frame decode failures yield that frame's row with NULL
     hash/dims; container-level failures (not an AVI, truncated RIFF)
     yield a single ``frame_no = -1`` poison row (I4) — per-document
-    isolation either way. The only Python is the per-document
-    container walk + pixel decode inside one Arrow-batched
-    mapInPandas (map-only, no shuffle); everything after the 64
-    grayscale columns is whole-stage-codegen Catalyst.
+    isolation either way; NULL payloads yield no rows. The only Python
+    is the per-document container walk + pixel decode on the map
+    kernel (map-only, no shuffle); everything after the 64 grayscale
+    columns is whole-stage-codegen Catalyst.
 
-    100-TB shape: payload bytes never shuffle — the mapInPandas runs
-    on the scan partitioning and emits 64 ints + dims per sampled
-    frame (~300 bytes), so downstream joins move fingerprints, not
-    video."""
+    100-TB shape: payload bytes never shuffle — the map kernel
+    (kernel.map_docs) runs on the scan partitioning and emits 64 ints
+    + dims per sampled frame (~300 bytes), so downstream joins move
+    fingerprints, not video."""
     if every < 1:
         raise ValueError("every must be >= 1")
-    from goose_parser_spark.deploy import ship_package
-    ship_package(df.sparkSession)
-    from pyspark.sql.types import BooleanType, IntegerType
+    from pyspark.sql.types import BooleanType
 
-    grid_schema = StructType(
-        [df.schema[id_col],
-         StructField("frame_no", IntegerType(), False),
-         StructField("width", IntegerType(), True),
-         StructField("height", IntegerType(), True),
-         StructField("_ok", BooleanType(), False)]
-        + [StructField(f"_p{k}", IntegerType(), True) for k in range(64)])
+    fields = [StructField("frame_no", IntegerType(), True),
+              StructField("width", IntegerType(), True),
+              StructField("height", IntegerType(), True),
+              StructField("_ok", BooleanType(), True),
+              *PIXEL_FIELDS]
+    bad_frame = (None, None, False, *[0] * 64)
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def fn(raw):
         from goose_parser_spark.ops.imagecodec import (
             avi_video_chunks, decode_image_gray, gif_frames_gray,
             resize_gray_box, webp_frames_gray)
-        for pdf in batches:
-            cols: dict[str, list] = {
-                id_col: [], "frame_no": [], "width": [], "height": [],
-                "_ok": []}
-            for k in range(64):
-                cols[f"_p{k}"] = []
-
-            def emit(doc_id, fno, w, h, ok, grid):
-                cols[id_col].append(doc_id)
-                cols["frame_no"].append(fno)
-                cols["width"].append(w)
-                cols["height"].append(h)
-                cols["_ok"].append(ok)
-                for k in range(64):
-                    cols[f"_p{k}"].append(grid[k])
-
-            zeros = [0] * 64
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                if payload is None:
-                    continue
-                raw = bytes(payload)
-                composer = None
-                if raw[:6] in (b"GIF87a", b"GIF89a"):
-                    composer = gif_frames_gray
-                elif raw[:4] == b"RIFF" and raw[8:12] == b"WEBP":
-                    composer = webp_frames_gray
-                if composer is not None:
-                    # animation: sample the COMPOSED canvases
-                    try:
-                        w, h, frames = composer(raw)
-                    except Exception:  # noqa: BLE001 — I4 isolation
-                        emit(doc_id, -1, None, None, False, zeros)
-                        continue
-                    for fno in range(0, len(frames), every):
-                        try:
-                            if frames[fno] is None:  # lossy sub-frame
-                                raise ValueError("undecodable frame")
-                            emit(doc_id, fno, w, h, True,
-                                 resize_gray_box(w, h, frames[fno]))
-                        except Exception:  # noqa: BLE001 — per-frame
-                            emit(doc_id, fno, None, None, False, zeros)
-                    continue
+        rows = []
+        composer = None
+        if raw[:6] in (b"GIF87a", b"GIF89a"):
+            composer = gif_frames_gray
+        elif raw[:4] == b"RIFF" and raw[8:12] == b"WEBP":
+            composer = webp_frames_gray
+        if composer is not None:
+            # animation: sample the COMPOSED canvases
+            w, h, frames = composer(raw)
+            for fno in range(0, len(frames), every):
                 try:
-                    _, chunks = avi_video_chunks(raw)
-                except Exception:  # noqa: BLE001 — I4 poison isolation
-                    emit(doc_id, -1, None, None, False, zeros)
-                    continue
-                for fno in range(0, len(chunks), every):
-                    try:
-                        w, h, px = decode_image_gray(chunks[fno])
-                        emit(doc_id, fno, w, h, True,
-                             resize_gray_box(w, h, px))
-                    except Exception:  # noqa: BLE001 — per-frame I4
-                        emit(doc_id, fno, None, None, False, zeros)
-            yield pd.DataFrame(cols)
+                    if frames[fno] is None:  # lossy sub-frame
+                        raise ValueError("undecodable frame")
+                    rows.append((fno, w, h, True,
+                                 *resize_gray_box(w, h, frames[fno])))
+                except Exception:  # noqa: BLE001 — per-frame I4
+                    rows.append((fno, *bad_frame))
+            return rows
+        _, chunks = avi_video_chunks(raw)
+        for fno in range(0, len(chunks), every):
+            try:
+                w, h, px = decode_image_gray(chunks[fno])
+                rows.append((fno, w, h, True, *resize_gray_box(w, h, px)))
+            except Exception:  # noqa: BLE001 — per-frame I4
+                rows.append((fno, *bad_frame))
+        return rows
 
-    base = df.select(id_col, payload_col).mapInPandas(
-        decode, schema=grid_schema)
+    out = map_docs(df, fn, fields, id_col, payload_col).where(
+        F.col("bytes_in").isNotNull())
+    base = out.select(
+        id_col, F.coalesce("frame_no", F.lit(-1)).alias("frame_no"),
+        "width", "height", F.coalesce("_ok", F.lit(False)).alias("_ok"),
+        *PIXELS)
     return _phash_from_pixel_cols(
         base, id_col, out_col, valid_col="_ok",
         extra_cols=("frame_no", "width", "height"))
@@ -498,57 +440,29 @@ def audio_features(
     One row per frame: ``id_col, sample_rate, n_channels, frame_no,
     energy, zero_crossings``. Compressed codecs (MP3/AAC/Vorbis) and
     malformed files yield a single ``frame_no = -1`` row with NULL
-    features (I4 poison isolation). Arrow-batched mapInPandas —
-    payload bytes cross the boundary once per batch; frames explode
-    inside the worker.
+    features (I4 poison isolation); NULL payloads yield no rows. Runs
+    on the per-document map kernel (kernel.map_docs) — payload bytes
+    cross the boundary once per batch; frames explode inside the
+    worker.
     """
-    from goose_parser_spark.deploy import ship_package
-    ship_package(df.sparkSession)
-    from pyspark.sql.types import IntegerType, LongType
+    fields = [StructField("sample_rate", IntegerType(), True),
+              StructField("n_channels", IntegerType(), True),
+              StructField("frame_no", IntegerType(), True),
+              StructField("energy", LongType(), True),
+              StructField("zero_crossings", IntegerType(), True)]
 
-    out_schema = StructType([
-        df.schema[id_col],
-        StructField("sample_rate", IntegerType(), True),
-        StructField("n_channels", IntegerType(), True),
-        StructField("frame_no", IntegerType(), False),
-        StructField("energy", LongType(), True),
-        StructField("zero_crossings", IntegerType(), True),
-    ])
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def fn(payload):
         from goose_parser_spark.ops.imagecodec import (
             audio_frame_features, decode_audio_pcm)
-        for pdf in batches:
-            cols = {k: [] for k in ("_id", "sample_rate", "n_channels",
-                                    "frame_no", "energy",
-                                    "zero_crossings")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                if payload is None:
-                    continue
-                try:
-                    rate, ch, samples = decode_audio_pcm(bytes(payload))
-                    feats = audio_frame_features(samples, frame=frame)
-                except Exception:  # noqa: BLE001 — I4 poison isolation
-                    cols["_id"].append(doc_id)
-                    cols["sample_rate"].append(None)
-                    cols["n_channels"].append(None)
-                    cols["frame_no"].append(-1)
-                    cols["energy"].append(None)
-                    cols["zero_crossings"].append(None)
-                    continue
-                for fno, (energy, zc) in enumerate(feats):
-                    cols["_id"].append(doc_id)
-                    cols["sample_rate"].append(rate)
-                    cols["n_channels"].append(ch)
-                    cols["frame_no"].append(fno)
-                    cols["energy"].append(energy)
-                    cols["zero_crossings"].append(zc)
-            out = pd.DataFrame(cols)
-            out.columns = [id_col] + list(out.columns[1:])
-            yield out
+        rate, ch, samples = decode_audio_pcm(payload)
+        return [(rate, ch, fno, energy, zc) for fno, (energy, zc)
+                in enumerate(audio_frame_features(samples, frame=frame))]
 
-    return df.select(id_col, payload_col).mapInPandas(
-        run, schema=out_schema)
+    out = map_docs(df, fn, fields, id_col, payload_col).where(
+        F.col("bytes_in").isNotNull())
+    return out.select(id_col, "sample_rate", "n_channels",
+                      F.coalesce("frame_no", F.lit(-1)).alias("frame_no"),
+                      "energy", "zero_crossings")
 
 
 def exif_metadata(
@@ -564,47 +478,20 @@ def exif_metadata(
     images BEFORE training). One row per document: ``id_col, make,
     model, orientation, datetime_original, exif_width, exif_height,
     has_gps``; non-JPEG / EXIF-less payloads yield an all-NULL row
-    (I4). Map-only Arrow-batched scan — a few hundred header bytes
-    per doc, no decode, no shuffle."""
-    from goose_parser_spark.deploy import ship_package
-    ship_package(df.sparkSession)
-    from pyspark.sql.types import BooleanType, IntegerType
+    (I4); NULL payloads yield no rows. Map-only scan on the map kernel
+    (kernel.map_docs) — a few hundred header bytes per doc, no decode,
+    no shuffle."""
+    from pyspark.sql.types import BooleanType
 
-    out_schema = StructType([
-        df.schema[id_col],
-        StructField("make", StringType(), True),
-        StructField("model", StringType(), True),
-        StructField("orientation", IntegerType(), True),
-        StructField("datetime_original", StringType(), True),
-        StructField("exif_width", IntegerType(), True),
-        StructField("exif_height", IntegerType(), True),
-        StructField("has_gps", BooleanType(), True),
-    ])
-    names = ["make", "model", "orientation", "datetime_original",
-             "exif_width", "exif_height", "has_gps"]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from goose_parser_spark.ops.imagecodec import parse_exif
-        for pdf in batches:
-            cols: dict[str, list] = {"_id": []}
-            for k in names:
-                cols[k] = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                if payload is None:
-                    continue
-                try:
-                    meta = parse_exif(bytes(payload))
-                except Exception:  # noqa: BLE001 — I4 poison isolation
-                    meta = dict.fromkeys(names)
-                cols["_id"].append(doc_id)
-                for k in names:
-                    cols[k].append(meta.get(k))
-            out = pd.DataFrame(cols)
-            out.columns = [id_col] + list(out.columns[1:])
-            yield out
-
-    return df.select(id_col, payload_col).mapInPandas(
-        run, schema=out_schema)
+    fields = [StructField("make", StringType(), True),
+              StructField("model", StringType(), True),
+              StructField("orientation", IntegerType(), True),
+              StructField("datetime_original", StringType(), True),
+              StructField("exif_width", IntegerType(), True),
+              StructField("exif_height", IntegerType(), True),
+              StructField("has_gps", BooleanType(), True)]
+    from goose_parser_spark.ops.imagecodec import parse_exif
+    return _metadata_rows(df, parse_exif, fields, payload_col, id_col)
 
 
 def audio_fingerprint(
@@ -665,39 +552,30 @@ def id3_metadata(
     declared encodings): title / artist / album feed dedup keys,
     rights triage and source attribution before any sample decode.
     One row per document: ``id_col, title, artist, album``; payloads
-    without an ID3v2 tag yield an all-NULL row (I4). Map-only
-    Arrow-batched header scan, no shuffle."""
-    from goose_parser_spark.deploy import ship_package
-    ship_package(df.sparkSession)
+    without an ID3v2 tag yield an all-NULL row (I4); NULL payloads
+    yield no rows. Map-only header scan on the map kernel
+    (kernel.map_docs), no shuffle."""
+    fields = [StructField(k, StringType(), True)
+              for k in ("title", "artist", "album")]
+    from goose_parser_spark.ops.imagecodec import parse_id3
+    return _metadata_rows(df, parse_id3, fields, payload_col, id_col)
 
-    out_schema = StructType([
-        df.schema[id_col],
-        StructField("title", StringType(), True),
-        StructField("artist", StringType(), True),
-        StructField("album", StringType(), True),
-    ])
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from goose_parser_spark.ops.imagecodec import parse_id3
-        for pdf in batches:
-            cols: dict[str, list] = {"_id": [], "title": [],
-                                     "artist": [], "album": []}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                if payload is None:
-                    continue
-                try:
-                    meta = parse_id3(bytes(payload))
-                except Exception:  # noqa: BLE001 — I4 poison isolation
-                    meta = {}
-                cols["_id"].append(doc_id)
-                for k in ("title", "artist", "album"):
-                    cols[k].append(meta.get(k))
-            out = pd.DataFrame(cols)
-            out.columns = [id_col] + list(out.columns[1:])
-            yield out
+def _metadata_rows(df: DataFrame, parser: Callable[[bytes], dict],
+                   fields: list[StructField], payload_col: str,
+                   id_col: str) -> DataFrame:
+    """One row per non-NULL payload: the ``fields`` values of the
+    ``parser(payload)`` dict (missing keys → NULL); a payload the
+    parser rejects yields an all-NULL row (I4)."""
+    names = [f.name for f in fields]
 
-    return df.select(id_col, payload_col).mapInPandas(
-        run, schema=out_schema)
+    def fn(payload):
+        meta = parser(payload)
+        return (tuple(meta.get(k) for k in names),)
+
+    out = map_docs(df, fn, fields, id_col, payload_col).where(
+        F.col("bytes_in").isNotNull())
+    return out.select(id_col, *names)
 
 
 def media_probe(
@@ -712,43 +590,22 @@ def media_probe(
     BEFORE paying for any decode: probing reads a few hundred header
     bytes per document, so the filter is scan-speed even for formats
     whose pixel decode needs codec libraries. Unrecognized payloads
-    yield a NULL-format row (I4). Columns: ``id_col, format, width,
-    height, duration_ms``."""
-    from goose_parser_spark.deploy import ship_package
-    ship_package(df.sparkSession)
-    from pyspark.sql.types import IntegerType, LongType
+    yield a NULL-format row (I4); NULL payloads yield no rows. Runs on
+    the per-document map kernel (kernel.map_docs). Columns: ``id_col,
+    format, width, height, duration_ms``."""
 
-    out_schema = StructType([
-        df.schema[id_col],
-        StructField("format", StringType(), True),
-        StructField("width", IntegerType(), True),
-        StructField("height", IntegerType(), True),
-        StructField("duration_ms", LongType(), True),
-    ])
+    fields = [StructField("format", StringType(), True),
+              StructField("width", IntegerType(), True),
+              StructField("height", IntegerType(), True),
+              StructField("duration_ms", LongType(), True)]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def fn(payload):
         from goose_parser_spark.ops.imagecodec import probe_media
-        for pdf in batches:
-            cols = {k: [] for k in ("_id", "format", "width", "height",
-                                    "duration_ms")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                if payload is None:
-                    continue
-                try:
-                    fmt, w, h, dur = probe_media(bytes(payload))
-                except Exception:  # noqa: BLE001 — I4 poison isolation
-                    fmt = w = h = dur = None
-                cols["_id"].append(doc_id)
-                cols["format"].append(fmt)
-                cols["width"].append(w)
-                cols["height"].append(h)
-                cols["duration_ms"].append(dur)
-            out = pd.DataFrame(cols)
-            out.columns = [id_col] + list(out.columns[1:])
-            yield out
+        return (tuple(probe_media(payload)),)
 
-    return df.select(id_col, payload_col).mapInPandas(
-        run, schema=out_schema)
+    out = map_docs(df, fn, fields, id_col, payload_col).where(
+        F.col("bytes_in").isNotNull())
+    return out.select(id_col, "format", "width", "height", "duration_ms")
 
 
 def vp8_luma(
@@ -764,42 +621,23 @@ def vp8_luma(
     luma`` where ``luma`` is the decoded Y plane (width*height bytes
     — for lossy WebP the Y plane IS the BT.601 gray the rest of the
     image pipeline computes from RGB). Malformed payloads yield a
-    NULL-luma row (I4 poison isolation).
+    NULL-luma row (I4 poison isolation); NULL payloads yield no rows.
 
-    100-TB shape: map-only Arrow-batched mapInPandas, no shuffle;
-    payload bytes cross the JVM↔Python boundary once and downstream
-    consumers hash or grid the luma without reshuffling bodies."""
-    from goose_parser_spark.deploy import ship_package
-    ship_package(df.sparkSession)
-    from pyspark.sql.types import BinaryType, IntegerType
+    100-TB shape: map-only on the per-document map kernel
+    (kernel.map_docs), no shuffle; payload bytes cross the JVM↔Python
+    boundary once and downstream consumers hash or grid the luma
+    without reshuffling bodies."""
+    from pyspark.sql.types import BinaryType
 
-    out_schema = StructType([
-        df.schema[id_col],
-        StructField("width", IntegerType(), True),
-        StructField("height", IntegerType(), True),
-        StructField("luma", BinaryType(), True),
-    ])
+    fields = [StructField("width", IntegerType(), True),
+              StructField("height", IntegerType(), True),
+              StructField("luma", BinaryType(), True)]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def fn(payload):
         from goose_parser_spark.ops.vp8 import decode_vp8
-        for pdf in batches:
-            cols: dict[str, list] = {"_id": [], "width": [],
-                                     "height": [], "luma": []}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                if payload is None:
-                    continue
-                try:
-                    w, h, y, _u, _v = decode_vp8(bytes(payload))
-                except Exception:  # noqa: BLE001 — I4 poison isolation
-                    w = h = None
-                    y = None
-                cols["_id"].append(doc_id)
-                cols["width"].append(w)
-                cols["height"].append(h)
-                cols["luma"].append(y)
-            out = pd.DataFrame(cols)
-            out.columns = [id_col] + list(out.columns[1:])
-            yield out
+        w, h, y, _u, _v = decode_vp8(payload)
+        return ((w, h, y),)
 
-    return df.select(id_col, payload_col).mapInPandas(
-        run, schema=out_schema)
+    out = map_docs(df, fn, fields, id_col, payload_col).where(
+        F.col("bytes_in").isNotNull())
+    return out.select(id_col, "width", "height", "luma")

@@ -5,9 +5,9 @@ fetching/processing. Two stages, split by what scales:
 
 - :func:`parse_robots` — robots.txt bodies → a (host, rule, prefix)
   RULES TABLE. Parsing is sequential line-state (user-agent groups),
-  so it runs in an Arrow-batched ``mapInPandas`` — but over the
-  robots table, which is bounded by the number of HOSTS (millions),
-  not documents (trillions). One small text per host.
+  so it runs on the per-document map kernel (kernel.map_docs) — but
+  over the robots table, which is bounded by the number of HOSTS
+  (millions), not documents (trillions). One small text per host.
 - :func:`robots_filter` — the per-document hot path, pure Catalyst
   and SHUFFLE-FREE on the url side: rules collapse to one array row
   per host, broadcast-join 1:1 on host, and the RFC longest-match
@@ -22,10 +22,12 @@ case-insensitively, falling back to the ``*`` group.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import StringType, StructField, StructType
+from pyspark.sql.types import (
+    ArrayType, DoubleType, StringType, StructField, StructType,
+)
+
+from goose_parser_spark.kernel import map_docs
 
 RULES_SCHEMA = StructType([
     StructField("host", StringType(), False),
@@ -73,22 +75,15 @@ def parse_robots(
     agent: str = "*",
 ) -> DataFrame:
     """robots bodies → rules table (host, rule, prefix); hosts whose
-    robots yields no rules for ``agent`` produce no rows (allow-all)."""
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
-        for pdf in batches:
-            hosts, rules, prefixes = [], [], []
-            for h, body in zip(pdf[host_col], pdf[body_col]):
-                if h is None:
-                    continue
-                for rule, prefix in parse_robots_text(body or "", agent):
-                    hosts.append(h)
-                    rules.append(rule)
-                    prefixes.append(prefix)
-            yield pd.DataFrame(
-                {"host": hosts, "rule": rules, "prefix": prefixes})
-
-    return df.mapInPandas(run, schema=RULES_SCHEMA)
+    robots yields no rules for ``agent`` (or whose body is NULL)
+    produce no rows (allow-all). Binary bodies decode as UTF-8."""
+    fields = [StructField(f.name, f.dataType, True)
+              for f in RULES_SCHEMA.fields[1:]]
+    out = map_docs(df.where(F.col(host_col).isNotNull()),
+                   lambda body: parse_robots_text(body, agent), fields,
+                   host_col, body_col, text=True)
+    return out.where(F.col("error").isNull()).select(
+        F.col(host_col).alias("host"), "rule", "prefix")
 
 
 def robots_filter(
@@ -206,31 +201,19 @@ def robots_directives(
     crawl_delay (double, NULL when unset)`` — the scheduler inputs
     (sitemap seeds feed :func:`goose_parser_spark.ops.crawl.
     sitemap_urls`; crawl_delay feeds per-host politeness budgets).
-    Map-only mapInPandas, one output row per input host."""
-    from pyspark.sql.types import (
-        ArrayType, DoubleType, StringType, StructField, StructType,
-    )
-    schema = StructType([
-        StructField("host", StringType(), True),
-        StructField("sitemaps", ArrayType(StringType()), True),
-        StructField("crawl_delay", DoubleType(), True),
-    ])
-
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
-        for pdf in batches:
-            hosts, sms, delays = [], [], []
-            for h, body in zip(pdf[host_col], pdf[body_col]):
-                if h is None:
-                    continue
-                sm, d = parse_robots_directives_text(body or "", agent)
-                hosts.append(h)
-                sms.append(sm)
-                delays.append(d)
-            yield pd.DataFrame(
-                {"host": hosts, "sitemaps": sms, "crawl_delay": delays})
-
-    return df.mapInPandas(run, schema=schema)
+    Map-only (kernel.map_docs), one output row per non-NULL input
+    host; a NULL body has no directives. Binary bodies decode as
+    UTF-8."""
+    fields = [StructField("sitemaps", ArrayType(StringType()), True),
+              StructField("crawl_delay", DoubleType(), True)]
+    out = map_docs(df.where(F.col(host_col).isNotNull()),
+                   lambda body: (parse_robots_directives_text(body, agent),),
+                   fields, host_col, body_col, text=True)
+    return out.select(
+        F.col(host_col).alias("host"),
+        F.coalesce("sitemaps", F.array().cast("array<string>"))
+        .alias("sitemaps"),
+        "crawl_delay")
 
 
 def robots_meta(

@@ -743,31 +743,25 @@ def normalize_text_nfc(
     them as different text).
 
     Spark has no built-in normalizer, so this is one of the few
-    sanctioned Python points: Arrow-batched ``mapInPandas`` over
-    ``unicodedata.normalize`` (C-implemented, no per-row Python
-    bytecode beyond the map call). The DuckDB oracle replays it with
-    ``nfc_normalize`` — a genuine cross-library differential (CPython
-    unicodedata vs DuckDB's utf8proc).
+    sanctioned Python points: the per-document map kernel
+    (kernel.map_docs) over ``unicodedata.normalize`` (C-implemented,
+    one call per document). The DuckDB oracle
+    replays it with ``nfc_normalize`` — a genuine cross-library
+    differential (CPython unicodedata vs DuckDB's utf8proc).
 
-    Columns: ``doc_id, text`` (normalized).
+    Columns: ``doc_id, text`` (normalized; NULL stays NULL).
     """
-    from pyspark.sql.types import (LongType, StringType, StructField,
-                                   StructType)
-    schema = StructType([
-        StructField(id_col, LongType(), True),
-        StructField(text_col, StringType(), True),
-    ])
+    import unicodedata
 
-    def run(batches):
-        import unicodedata
-        norm = unicodedata.normalize
-        for pdf in batches:
-            out = pdf[[id_col, text_col]].copy()
-            out[text_col] = out[text_col].map(
-                lambda t: norm("NFC", t) if t is not None else None)
-            yield out
+    from pyspark.sql.types import StringType, StructField
 
-    return df.select(id_col, text_col).mapInPandas(run, schema=schema)
+    from goose_parser_spark.kernel import map_docs
+
+    out = map_docs(
+        df, lambda t: ((unicodedata.normalize("NFC", t),),),
+        [StructField(text_col, StringType(), True)], id_col, text_col,
+        text=True)
+    return out.select(id_col, text_col)
 
 
 def readability_scores(

@@ -224,49 +224,26 @@ def read_wiki_dump(spark: "SparkSession", path: str) -> "DataFrame":
 
 def wiki_clean(df: "DataFrame", text_col: str = "wikitext",
                id_col: str = "page_id") -> "DataFrame":
-    """Wikitext → plain text at corpus scale: map-only Arrow-batched
-    mapInPandas (markup stripping is per-document string work — the
-    sanctioned Python point), one row per input with ``clean_text``
-    and the integer markup-density signal ``n_templates`` (how many
-    top-level templates were dropped — a quality feature: list/
-    infobox-only pages have high template counts and little prose).
-    Failures yield a NULL clean_text row (I4)."""
-    import pandas as pd
+    """Wikitext → plain text at corpus scale: map-only per-document
+    string work on the map kernel (kernel.map_docs — markup stripping
+    is the sanctioned Python point), one row per non-NULL input with
+    ``clean_text`` and the integer markup-density signal
+    ``n_templates`` (how many top-level templates were dropped — a
+    quality feature: list/infobox-only pages have high template counts
+    and little prose). Failures yield a NULL clean_text row (I4)."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import IntegerType, StringType, StructField
 
-    from pyspark.sql.types import (
-        IntegerType, StringType, StructField, StructType,
-    )
+    from goose_parser_spark.kernel import map_docs
 
-    from goose_parser_spark.deploy import ship_package
-    ship_package(df.sparkSession)
-    out_schema = StructType([
-        df.schema[id_col],
-        StructField("clean_text", StringType(), True),
-        StructField("n_templates", IntegerType(), True),
-    ])
-
-    def run(batches):
-        for pdf in batches:
-            ids: list = []
-            texts: list = []
-            counts: list = []
-            for pid, wt in zip(pdf[id_col], pdf[text_col]):
-                if wt is None:
-                    continue
-                ids.append(pid)
-                try:
-                    texts.append(wikitext_to_text(str(wt)))
-                    counts.append(_count_top_templates(str(wt)))
-                except Exception:  # noqa: BLE001 — I4 isolation
-                    texts.append(None)
-                    counts.append(None)
-            out = pd.DataFrame({"_id": ids, "clean_text": texts,
-                                "n_templates": counts})
-            out.columns = [id_col] + list(out.columns[1:])
-            yield out
-
-    return df.select(id_col, text_col).mapInPandas(
-        run, schema=out_schema)
+    fields = [StructField("clean_text", StringType(), True),
+              StructField("n_templates", IntegerType(), True)]
+    out = map_docs(
+        df,
+        lambda wt: ((wikitext_to_text(wt), _count_top_templates(wt)),),
+        fields, id_col, text_col, text=True).where(
+        F.col("bytes_in").isNotNull())
+    return out.select(id_col, "clean_text", "n_templates")
 
 
 def _count_top_templates(s: str) -> int:

@@ -951,59 +951,30 @@ def zstd_text(df, payload_col: str = "payload", id_col: str = "doc_id",
     bodies landed by a crawler). One row per input row:
     ``id_col, n_frames, content_len, checksum_state, text``; decode
     failures yield a single ``n_frames = -1`` row with NULL content
-    (I4 poison isolation — same contract as the media codecs).
-    Arrow-batched mapInPandas; decode is the only Python node, the
-    plan is map-only (no shuffle), and ``max_out`` bounds per-doc
-    inflation so a bomb poisons its row instead of the executor."""
-    from collections.abc import Iterator as _Iter
-
-    import pandas as pd
+    (I4 poison isolation — same contract as the media codecs); NULL
+    payloads yield no rows. Runs on the per-document map kernel
+    (kernel.map_docs); decode is the only Python node, the plan is
+    map-only (no shuffle), and ``max_out`` bounds per-doc inflation so
+    a bomb poisons its row instead of the executor."""
+    from pyspark.sql import functions as F
     from pyspark.sql.types import (
-        IntegerType, LongType, StringType, StructField, StructType)
+        IntegerType, LongType, StringType, StructField)
 
-    from goose_parser_spark.deploy import ship_package
-    ship_package(df.sparkSession)
+    from goose_parser_spark.kernel import map_docs
 
-    out_schema = StructType([
-        df.schema[id_col],
-        StructField("n_frames", IntegerType(), False),
-        StructField("content_len", LongType(), True),
-        StructField("checksum_state", StringType(), True),
-        StructField("text", StringType(), True),
-    ])
+    fields = [StructField("n_frames", IntegerType(), True),
+              StructField("content_len", LongType(), True),
+              StructField("checksum_state", StringType(), True),
+              StructField("text", StringType(), True)]
 
-    def run(batches: "_Iter[pd.DataFrame]") -> "_Iter[pd.DataFrame]":
-        for pdf in batches:
-            cols: dict[str, list] = {k: [] for k in (
-                "_id", "n_frames", "content_len", "checksum_state",
-                "text")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                if payload is None:
-                    continue
-                try:
-                    content, n_frames, cstate = decode_frames(
-                        bytes(payload), max_out=max_out,
-                        verify_checksum=False)
-                    text = content.decode("utf-8", "replace")
-                except ZstdError:
-                    cols["_id"].append(doc_id)
-                    cols["n_frames"].append(-1)
-                    cols["content_len"].append(None)
-                    cols["checksum_state"].append(None)
-                    cols["text"].append(None)
-                    continue
-                cols["_id"].append(doc_id)
-                cols["n_frames"].append(n_frames)
-                cols["content_len"].append(len(content))
-                cols["checksum_state"].append(cstate)
-                cols["text"].append(text)
-            yield pd.DataFrame({
-                id_col: cols["_id"],
-                "n_frames": cols["n_frames"],
-                "content_len": cols["content_len"],
-                "checksum_state": cols["checksum_state"],
-                "text": cols["text"],
-            })
+    def fn(payload):
+        content, n_frames, cstate = decode_frames(
+            payload, max_out=max_out, verify_checksum=False)
+        return ((n_frames, len(content), cstate,
+                 content.decode("utf-8", "replace")),)
 
-    return (df.select(id_col, payload_col)
-            .mapInPandas(run, schema=out_schema))
+    out = map_docs(df, fn, fields, id_col, payload_col).where(
+        F.col("bytes_in").isNotNull())
+    return out.select(id_col,
+                      F.coalesce("n_frames", F.lit(-1)).alias("n_frames"),
+                      "content_len", "checksum_state", "text")

@@ -13,8 +13,9 @@ compile ONCE on the driver:
    (SURVEY.md §1.2 — the output shape is fully determined by the rule
    JSON, nothing is inferred from data).
 
-The resulting ``CompiledRules`` object is pickled into the mapInPandas
-closure — effectively a broadcast of the plan to all executors.
+The resulting ``CompiledRules`` object is pickled into the closure the
+map kernel (kernel.map_docs) runs — effectively a broadcast of the
+plan to all executors.
 """
 
 from __future__ import annotations

@@ -152,18 +152,31 @@ def evaluate_branches(branches: list[Branch], doc: _DocContext) -> object:
 def evaluate_document_many(
     compiled_by_name: dict[str, CompiledRules],
     html: str | bytes,
-) -> dict[str, object]:
+) -> tuple[dict[str, object], list[str]]:
     """Evaluate SEVERAL compiled rule trees against ONE parse of the
     document (multi-tenant extraction: one scan of the corpus serves
     every consumer's rules). The selector memo cache is shared across
     trees, so trees with overlapping scopes pay for each selector
     once. Full Python transform chains (no native lowering — the
-    per-tree schemas stay self-contained)."""
+    per-tree schemas stay self-contained).
+
+    Returns ``(row, errors)``: per-tree I4 isolation — a tree whose
+    evaluation raises maps to None in ``row`` and adds a
+    ``tree=<name>: <ExcClass>: <msg>`` entry to ``errors``, so one bad
+    ruleset never poisons the other tenants. A document that fails to
+    parse raises."""
     root, elements = parse_document(html)
     universe = _union_universe(compiled_by_name.values())
     doc = _DocContext(root, elements, universe=universe)
-    return {name: evaluate_branches(c.branches, doc)
-            for name, c in compiled_by_name.items()}
+    row: dict[str, object] = {}
+    errors: list[str] = []
+    for name, c in compiled_by_name.items():
+        try:
+            row[name] = evaluate_branches(c.branches, doc)
+        except Exception as exc:  # noqa: BLE001 — per-tree I4
+            row[name] = None
+            errors.append(f"tree={name}: {type(exc).__name__}: {exc}")
+    return row, errors
 
 
 def _union_universe(compiled_trees) -> tuple:

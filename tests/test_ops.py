@@ -156,6 +156,20 @@ def test_multimodal_plumbing(spark, docs):
             [round(x, 5) for x in want]
 
 
+def test_extract_features_null_and_undecodable_payloads(spark):
+    """A NULL payload keeps its row with n_bytes 0 and NULL features. A
+    payload the decoder rejects (a string column: TypeError) gets NULL
+    features and its byte length; it used to fail the task."""
+    df = spark.createDataFrame([(1, b"img"), (2, None)],
+                               "doc_id long, payload binary")
+    out = {r["doc_id"]: r for r in extract_features(df).collect()}
+    assert out[1]["n_bytes"] == 3 and out[1]["features"] is not None
+    assert (out[2]["n_bytes"], out[2]["features"]) == (0, None)
+    strings = spark.createDataFrame([(3, "é")], "doc_id long, payload string")
+    (row,) = extract_features(strings).collect()
+    assert (row["doc_id"], row["n_bytes"], row["features"]) == (3, 2, None)
+
+
 def test_decode_stub_contract():
     with pytest.raises(NotImplementedError):
         decode_stub(b"img", fake=False)

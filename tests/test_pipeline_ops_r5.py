@@ -306,6 +306,19 @@ def test_phash_dct_matches_reference_and_perceptual_props(spark):
     near = bin(out[0] ^ out[3]).count("1")       # jitter 0 vs 222
     far = bin(out[0] ^ out[4]).count("1")        # img-0 vs img-1
     assert near <= 10 < far
+    # a NULL payload makes every pixel NULL: the reflect() barrier
+    # passes NULL through instead of failing the job, every AC sum is
+    # NULL, no bit is set and the hash is 0. A NULL jitter drops out of
+    # greatest(), so pixel 0 clamps to 0.
+    nulls = spark.createDataFrame(
+        [(1, b"abc", 0), (2, None, 0), (3, b"abc", None)],
+        "doc_id long, payload binary, j long")
+    got = {r["doc_id"]: r["phash"]
+           for r in phash_dct(nulls, pixel_jitter=F.col("j")).collect()}
+    assert got == {1: ref_phash(b"abc"), 2: 0, 3: ref_phash(b"abc", -255)}
+    got = {r["doc_id"]: r["phash"] for r in phash_dct(
+        nulls.select("doc_id", "payload")).collect()}
+    assert got == {1: ref_phash(b"abc"), 2: 0, 3: ref_phash(b"abc")}
 
 
 def test_snapshot_diff_four_statuses(spark):

@@ -131,3 +131,21 @@ def test_robots_directives_last_group_wins_and_sitemap_splits_groups():
     # so '*' has no delay of its own... but slowbot's group IS the
     # fallback-free lookup: '*' resolves to None.
     assert d_star is None
+
+
+def test_robots_binary_and_null_bodies(spark):
+    """Binary bodies decode as UTF-8 (invalid bytes → U+FFFD) on the
+    map kernel; they used to fail the task with a TypeError. A NULL
+    body has no rules and no directives; a NULL host yields no row."""
+    from goose_parser_spark.ops.robots import robots_directives
+    df = spark.createDataFrame(
+        [("a.test", b"User-agent: *\nDisallow: /x\xff\nCrawl-delay: 3"),
+         ("b.test", None), (None, b"User-agent: *\nDisallow: /")],
+        "host string, robots_txt binary")
+    assert [tuple(r) for r in parse_robots(df).collect()] == [
+        ("a.test", "disallow", "/x�")]
+    out = {r["host"]: r for r in robots_directives(df).collect()}
+    assert sorted(out) == ["a.test", "b.test"]
+    assert out["a.test"]["crawl_delay"] == 3.0
+    assert (out["b.test"]["sitemaps"], out["b.test"]["crawl_delay"]) == (
+        [], None)

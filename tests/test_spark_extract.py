@@ -1,9 +1,8 @@
-"""End-to-end Spark extraction: pages DataFrame → mapInPandas →
+"""End-to-end Spark extraction: pages DataFrame → mapInArrow →
 nested-struct results, byte-compared against the goldens.
 
 Also asserts plan shape: column pruning reaches the scan and the only
-Python boundary is one ArrowEvalPython/MapInPandas node
-(SURVEY.md §4.2)."""
+Python boundary is one MapInArrow node (SURVEY.md §4.2)."""
 
 import json
 
@@ -180,10 +179,10 @@ def test_extract_many_32_trees_memo_dedup_and_schema(spark):
         ev.select_indexed = lambda idx, ctx, sel: (
             calls.append(1) or orig(idx, ctx, sel))
         try:
-            out = ev.evaluate_document_many(compiled, html)
+            out, errors = ev.evaluate_document_many(compiled, html)
         finally:
             ev.select_indexed = orig
-        assert len(out) == n_trees
+        assert len(out) == n_trees and not errors
         return len(calls)
 
     one = count_selector_calls(1)

@@ -355,3 +355,24 @@ def test_read_pages_jsonl_zst(spark, tmp_path):
     rows = sorted((r.url, bytes(r.html), r.text) for r in df.collect())
     assert len(rows) == 9
     assert rows[3] == ("https://ex.com/j3", b"<p>3</p>", "doc 3")
+
+
+def test_zstd_text_poison_rows_and_non_zstd_errors(spark):
+    """zstd_text on the map kernel: a valid stream decodes, a NULL
+    payload yields no row and a corrupt one the ``n_frames = -1`` row.
+    A payload the decoder rejects with something other than ZstdError
+    (a string column: TypeError) gets the same poison row; it used to
+    fail the task."""
+    from goose_parser_spark.ops.zstdcodec import zstd_text
+    df = spark.createDataFrame(
+        [(1, HELLO_TAR_ZST), (2, None), (3, b"\x28\xb5\x2f\xfd junk")],
+        "doc_id long, payload binary")
+    out = {r["doc_id"]: r for r in zstd_text(df).collect()}
+    assert sorted(out) == [1, 3]
+    assert out[1]["n_frames"] == 1 and out[1]["checksum_state"] == "ok"
+    assert out[1]["content_len"] == len(decompress(HELLO_TAR_ZST))
+    assert (out[3]["n_frames"], out[3]["text"]) == (-1, None)
+    strings = spark.createDataFrame([(4, "\x28\xb5\x2f\xfd junk")],
+                                    "doc_id long, payload string")
+    (row,) = zstd_text(strings).collect()
+    assert (row["doc_id"], row["n_frames"], row["content_len"]) == (4, -1, None)

@@ -310,7 +310,7 @@ CHECKS = {
     ],
     "pdf_extract": [
         ("PDF parse is the only Python node (authoring is pure "
-         "concat)", lambda p: _exec_part(p).count("MapInPandas") == 1
+         "concat)", lambda p: _exec_part(p).count("MapInArrow") == 1
          and "BatchEvalPython" not in p),
         ("map-only: no shuffle", lambda p: "Exchange" not in
          _exec_part(p)),
@@ -318,28 +318,28 @@ CHECKS = {
     "jpeg_decode": [
         ("JPEG decode is the only Python node (authoring is pure "
          "concat/unhex; DCT stays Catalyst)",
-         lambda p: _exec_part(p).count("MapInPandas") == 1
+         lambda p: _exec_part(p).count("MapInArrow") == 1
          and "BatchEvalPython" not in p),
         ("map-only: no shuffle", lambda p: "Exchange" not in
          _exec_part(p)),
     ],
     "zstd_decode": [
         ("zstd decode is the only Python node (authoring is pure "
-         "concat)", lambda p: _exec_part(p).count("MapInPandas") == 1
+         "concat)", lambda p: _exec_part(p).count("MapInArrow") == 1
          and "BatchEvalPython" not in p),
         ("map-only: no shuffle", lambda p: "Exchange" not in
          _exec_part(p)),
     ],
     "brotli_decode": [
         ("brotli decode is the only Python node (authoring is pure "
-         "concat)", lambda p: _exec_part(p).count("MapInPandas") == 1
+         "concat)", lambda p: _exec_part(p).count("MapInArrow") == 1
          and "BatchEvalPython" not in p),
         ("map-only: no shuffle", lambda p: "Exchange" not in
          _exec_part(p)),
     ],
     "vp8_decode": [
         ("VP8 decode is the only Python node (fixture lookup is a "
-         "JVM array)", lambda p: _exec_part(p).count("MapInPandas")
+         "JVM array)", lambda p: _exec_part(p).count("MapInArrow")
          == 1 and "BatchEvalPython" not in p),
         ("map-only: no shuffle", lambda p: "Exchange" not in
          _exec_part(p)),
@@ -347,21 +347,21 @@ CHECKS = {
     "pdf_images": [
         ("PDF parse+decode is the only Python node (authoring is "
          "pure concat; the pHash is Catalyst)",
-         lambda p: _exec_part(p).count("MapInPandas") == 1
+         lambda p: _exec_part(p).count("MapInArrow") == 1
          and "BatchEvalPython" not in p),
         ("map-only: no shuffle", lambda p: "Exchange" not in
          _exec_part(p)),
     ],
     "wikitext_clean": [
         ("markup stripping is the only Python node (authoring is "
-         "pure concat)", lambda p: _exec_part(p).count("MapInPandas")
+         "pure concat)", lambda p: _exec_part(p).count("MapInArrow")
          == 1 and "BatchEvalPython" not in p),
         ("map-only: no shuffle", lambda p: "Exchange" not in
          _exec_part(p)),
     ],
     "latex_clean": [
         ("TeX stripping is the only Python node (authoring is pure "
-         "concat)", lambda p: _exec_part(p).count("MapInPandas") == 1
+         "concat)", lambda p: _exec_part(p).count("MapInArrow") == 1
          and "BatchEvalPython" not in p),
         ("map-only: no shuffle", lambda p: "Exchange" not in
          _exec_part(p)),
@@ -385,14 +385,14 @@ CHECKS = {
     "epub_chapters": [
         ("zip walk + DOM parse is the only Python node (the zip "
          "authoring incl. CRC32 is pure JVM concat)",
-         lambda p: _exec_part(p).count("MapInPandas") == 1
+         lambda p: _exec_part(p).count("MapInArrow") == 1
          and "BatchEvalPython" not in p),
         ("map-only: no shuffle", lambda p: "Exchange" not in
          _exec_part(p)),
     ],
     "mbox_messages": [
         ("MIME parse is the only Python node (authoring is pure "
-         "concat)", lambda p: _exec_part(p).count("MapInPandas") == 1
+         "concat)", lambda p: _exec_part(p).count("MapInArrow") == 1
          and "BatchEvalPython" not in p),
         ("map-only: no shuffle", lambda p: "Exchange" not in
          _exec_part(p)),
@@ -413,7 +413,7 @@ CHECKS = {
     ],
     "pdf_metadata": [
         ("info parse is the only Python node (authoring is pure "
-         "concat)", lambda p: _exec_part(p).count("MapInPandas") == 1
+         "concat)", lambda p: _exec_part(p).count("MapInArrow") == 1
          and "BatchEvalPython" not in p),
         ("map-only: no shuffle", lambda p: "Exchange" not in
          _exec_part(p)),
@@ -434,7 +434,7 @@ CHECKS = {
     ],
     "phash_image_decode": [
         ("decode is the only Python node (DCT stays Catalyst)",
-         lambda p: _exec_part(p).count("MapInPandas") == 1
+         lambda p: _exec_part(p).count("MapInArrow") == 1
          and "BatchEvalPython" not in p),
         ("map-only: no shuffle", lambda p: "Exchange" not in
          _exec_part(p)),
@@ -442,7 +442,7 @@ CHECKS = {
     "exif_parse": [
         ("IFD walk is the only Python node (authoring is pure "
          "hex concat)",
-         lambda p: _exec_part(p).count("MapInPandas") == 1
+         lambda p: _exec_part(p).count("MapInArrow") == 1
          and "BatchEvalPython" not in p),
         ("map-only: no shuffle — header-bytes scan, no decode",
          lambda p: "Exchange" not in _exec_part(p)),
@@ -458,7 +458,7 @@ CHECKS = {
     "audio_fingerprint": [
         ("decode is the only Python node; envelope bits are pure "
          "Catalyst (window lag + bit sum)",
-         lambda p: _exec_part(p).count("MapInPandas") == 1
+         lambda p: _exec_part(p).count("MapInArrow") == 1
          and "BatchEvalPython" not in p),
         ("exactly one keyed shuffle (the per-doc window/agg)",
          lambda p: _exec_part(p).count("Exchange hashpartitioning")
@@ -467,14 +467,14 @@ CHECKS = {
     "id3_tags": [
         ("tag walk is the only Python node (authoring is pure "
          "hex concat)",
-         lambda p: _exec_part(p).count("MapInPandas") == 1
+         lambda p: _exec_part(p).count("MapInArrow") == 1
          and "BatchEvalPython" not in p),
         ("map-only: no shuffle", lambda p: "Exchange" not in
          _exec_part(p)),
     ],
     "webp_frames": [
         ("ANMF walk + VP8L decode is the only Python node",
-         lambda p: _exec_part(p).count("MapInPandas") == 1
+         lambda p: _exec_part(p).count("MapInArrow") == 1
          and "BatchEvalPython" not in p),
         ("map-only: no shuffle", lambda p: "Exchange" not in
          _exec_part(p)),
@@ -482,7 +482,7 @@ CHECKS = {
     "gif_frames": [
         ("composition + LZW decode is the only Python node "
          "(authoring is pure hex concat; pHash DCT stays Catalyst)",
-         lambda p: _exec_part(p).count("MapInPandas") == 1
+         lambda p: _exec_part(p).count("MapInArrow") == 1
          and "BatchEvalPython" not in p),
         ("map-only: no shuffle", lambda p: "Exchange" not in
          _exec_part(p)),
@@ -490,7 +490,7 @@ CHECKS = {
     "webp_decode": [
         ("VP8L decode is the only Python node (authoring is pure "
          "arithmetic/concat; DCT stays Catalyst)",
-         lambda p: _exec_part(p).count("MapInPandas") == 1
+         lambda p: _exec_part(p).count("MapInArrow") == 1
          and "BatchEvalPython" not in p),
         ("map-only: no shuffle", lambda p: "Exchange" not in
          _exec_part(p)),
@@ -498,7 +498,7 @@ CHECKS = {
     "g711_decode": [
         ("G.711 expansion is the only Python node (authoring is "
          "pure concat/unhex)",
-         lambda p: _exec_part(p).count("MapInPandas") == 1
+         lambda p: _exec_part(p).count("MapInArrow") == 1
          and "BatchEvalPython" not in p),
         ("map-only: no shuffle", lambda p: "Exchange" not in
          _exec_part(p)),
@@ -506,7 +506,7 @@ CHECKS = {
     "video_frames": [
         ("container walk + frame decode is the only Python node "
          "(pHash DCT stays Catalyst)",
-         lambda p: _exec_part(p).count("MapInPandas") == 1
+         lambda p: _exec_part(p).count("MapInArrow") == 1
          and "BatchEvalPython" not in p),
         ("map-only: no shuffle — fingerprints, not frames, reach "
          "downstream joins", lambda p: "Exchange" not in
