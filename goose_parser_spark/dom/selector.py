@@ -91,7 +91,10 @@ class Compound:
 @dataclass
 class Complex:
     """One complex selector: [(combinator, Compound), ...].
-    The first combinator is ' ' (descendant-of-context)."""
+    The first combinator relates the first compound to the context:
+    ' ' (descendant, the default when none is written), or a leading
+    '>', '+' or '~' (child, next sibling, following sibling of a
+    context node; see _rel_to_context)."""
     steps: list[tuple[str, Compound]]
     # static per-selector property consulted on EVERY select call:
     # positional pseudos on a non-final compound force the
@@ -772,6 +775,22 @@ class DocIndex:
             self._ends = ends
         return ends
 
+    def within(self, pool: list[Element], ctx: Element) -> list[Element]:
+        """The members of ``pool`` (doc-ordered, duplicate-free) that
+        lie strictly inside ``ctx``'s subtree: the pre-order interval
+        (ctx.order, subtree_ends[ctx.order]]. Two integer comparisons
+        per member instead of an ancestor walk; large pools take a
+        bisect + slice (O(log pool + matches)), which keeps row-wise
+        grid selection near-linear in the document instead of
+        quadratic. Always a new list, never the index's own pool."""
+        lo = ctx.order
+        hi = self.subtree_ends().get(lo, lo)
+        if len(pool) > 64:
+            i = bisect_right(pool, lo, key=_el_order)
+            j = bisect_right(pool, hi, lo=i, key=_el_order)
+            return pool[i:j]
+        return [el for el in pool if lo < el.order <= hi]
+
     def candidates_simple(self, comp: Compound) -> list[Element] | None:
         """Exact match list for a ``simple`` compound against the whole
         document, or None when the shape needs the generic path. The
@@ -947,9 +966,19 @@ def _chain_matches(el: Element, alt: Complex, step_idx: int,
 
 def select_indexed(index: DocIndex, context: list[Element] | Element,
                    selector: Selector | str) -> list[Element]:
-    """Indexed evaluation; falls back to the set-based walker for
-    alternatives with positional pseudos on non-final compounds (their
-    semantics are inherently left-to-right)."""
+    """Indexed evaluation: each alternative fetches its rightmost
+    compound's pool from the index and verifies the combinator chain
+    leftward. Falls back to the set-based walker for alternatives with
+    positional pseudos on non-final compounds (their semantics are
+    inherently left-to-right).
+
+    A call with exactly one context that is not the index root (a grid
+    row) first cuts each pool to the context's pre-order interval
+    (:meth:`DocIndex.within`) — for every alternative whose first
+    combinator is ' ' or '>', single- and multi-step alike. Calls at
+    the root, calls with several contexts, and alternatives led by
+    '+' or '~' (whose matches lie outside the context's subtree) scan
+    the whole pool."""
     if isinstance(selector, str):
         selector = parse_selector(selector)
     roots = [context] if isinstance(context, Element) else list(context)
@@ -962,8 +991,9 @@ def select_indexed(index: DocIndex, context: list[Element] | Element,
         # context node ('div.product', 'h1.title', …, the overwhelming
         # shape in rule trees) — the index pool is the exact match set;
         # skip _matches_compound and the chain-walk frames (and the
-        # evaluation-context push: nothing here consults it). Non-root
-        # contexts add only an ancestor check per pool element.
+        # evaluation-context push: nothing here consults it). A non-root
+        # context (a grid row, selected once per row) takes its slice
+        # of the pool, not the whole pool.
         steps = alternatives[0].steps
         if len(steps) == 1 and steps[0][0] == " " and steps[0][1].simple:
             fast = index.candidates_simple(steps[0][1])
@@ -977,22 +1007,7 @@ def select_indexed(index: DocIndex, context: list[Element] | Element,
                     # cheaper than the per-element match loop this
                     # path replaces.
                     return list(fast)
-                # descendant-of-context via the pre-order interval:
-                # two integer comparisons per candidate instead of an
-                # ancestor walk per candidate — grid rules select once
-                # per row, so the walk made grids O(rows × pool ×
-                # depth). Pools are doc-ordered, so on large pools the
-                # interval is a bisect + slice (O(log pool + matches)),
-                # which keeps row-wise grid selection near-linear in
-                # the document instead of quadratic.
-                ctx = roots[0]
-                lo = ctx.order
-                hi = index.subtree_ends().get(lo, lo)
-                if len(fast) > 64:
-                    i = bisect_right(fast, lo, key=_el_order)
-                    j = bisect_right(fast, hi, lo=i, key=_el_order)
-                    return fast[i:j]
-                return [el for el in fast if lo < el.order <= hi]
+                return index.within(fast, roots[0])
 
     global _EVAL_CTX
     prev_ctx = _EVAL_CTX
@@ -1021,6 +1036,12 @@ def _select_indexed_impl(index: DocIndex, roots: list[Element],
                          selector: Selector, ctx_is_root: bool,
                          single: bool) -> list[Element]:
     ctx_orders = {e.order for e in roots}
+    # one inner context (a grid row): an alternative led by ' ' or '>'
+    # matches only inside the row's subtree — later steps descend, or
+    # move to siblings of nodes already inside it — so its pool shrinks
+    # to the row's interval before the chain is verified. Leading '+'
+    # and '~' match outside the subtree and keep the whole pool.
+    row = roots[0] if len(roots) == 1 and not ctx_is_root else None
     seen: set[int] = set()
     results: list[Element] = []
     for alt in selector.alternatives:
@@ -1029,11 +1050,14 @@ def _select_indexed_impl(index: DocIndex, roots: list[Element],
         else:
             last_idx = len(alt.steps) - 1
             last_comp = alt.steps[last_idx][1]
+            pool = index.candidates(last_comp)
+            if row is not None and alt.steps[0][0] in (" ", ">"):
+                pool = index.within(pool, row)
             # the relation checks implement find-semantics: the ' '
             # chain walks strict ancestors, so context nodes themselves
             # never match (index.all already excludes the doc root)
             matched = [
-                el for el in index.candidates(last_comp)
+                el for el in pool
                 if _matches_compound(el, last_comp)
                 and _chain_matches(el, alt, last_idx, ctx_orders, ctx_is_root)
             ]

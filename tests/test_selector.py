@@ -377,3 +377,136 @@ def test_has_store_survives_argument_selector_identity_reuse():
     # and same-source selectors share the cache (one doc pass)
     assert len(idx.has_store) == 2
     assert set(idx.has_store) == {"span", "em"}
+
+
+# --- inner-context pools: the row's interval, not the whole page -------------
+
+from goose_parser_spark.dom import selector as selector_mod
+from goose_parser_spark.dom.parser import parse_document
+
+_G_TAGS = ["div", "p", "span", "ul", "li", "a"]
+
+# every shape the interval slice serves or must skip: multi-step chains,
+# leading combinators, a positional last compound, :has/:not inside a
+# step, id-keyed pools, several alternatives, and the one-compound fast
+# path (whose '*' pool exceeds the bisect cut-off on the larger DOMs)
+_INNER_SELECTORS = [
+    "div p", "p > span", "div.a li",
+    "+ p", "~ span", "> li",
+    "ul li:first", "li:eq(1)", "a:last",
+    "div:has(span) p", "li:not(.a) a", "ul:not(.b) > li",
+    "#x p",
+    "span.b a, li a",
+    "*", ".a", "li",
+]
+
+
+@st.composite
+def _grid_doms(draw):
+    """A random card repeated a few times, plus one trailing subtree:
+    grids give contexts with identical subtrees and pools large enough
+    to take the bisect."""
+    def node(d):
+        tag = draw(st.sampled_from(_G_TAGS))
+        cls = draw(st.lists(st.sampled_from(["a", "b"]), max_size=2,
+                            unique=True))
+        attrs = f' class="{" ".join(cls)}"' if cls else ""
+        if draw(st.integers(0, 9)) == 0:
+            attrs += ' id="x"'
+        kids = draw(st.integers(0, 3)) if d else 0
+        inner = "".join(node(d - 1) for _ in range(kids)) or "t"
+        return f"<{tag}{attrs}>{inner}</{tag}>"
+    card = node(3)
+    reps = draw(st.integers(1, 6))
+    return "<html><body>" + card * reps + node(2) + "</body></html>"
+
+
+@settings(max_examples=40, deadline=None)
+@given(html=_grid_doms())
+def test_indexed_equals_walker_from_every_context(html):
+    root, created = parse_document(html)
+    idx = DocIndex(root, created)
+    for ctx in [root] + idx.all:
+        for s in _INNER_SELECTORS:
+            assert [e.order for e in select_indexed(idx, ctx, s)] == \
+                [e.order for e in select(ctx, s)], (s, ctx.order, html)
+
+
+_RECOVERY_HTML = [
+    "<html><body><p><b><i>x</b>y</i>z</p></body></html>",
+    "<table><tr><td>a</td></tr>stray<div>foster</div><tr><td>b</td></tr>"
+    "</table>",
+    "<html><body><table><tr><td>1</td><td>2</td></tr><tr><td>3"
+    "</table></body></html>",
+    "<ul><li>a<li>b<ul><li>c<li>d</ul><li>e</ul><dl><dt>t<dd>u<dt>v</dl>",
+    "<body><form><input><form><input></form></form><p>after</body>",
+    '<html><body><div class="listing"><div class="card"><h3 class="t">'
+    '<a href="/p/1">one</a></h3><ul class="tags"><li>x</li></ul></div>'
+    '<div class="card"><h3 class="t"><a href="/p/2">two</a>',
+]
+
+
+def _assert_subtrees_are_intervals(root, elements):
+    idx = DocIndex(root, elements)
+    orders = [el.order for el in idx.all]
+    assert all(a < b for a, b in zip(orders, orders[1:]))
+    ends = idx.subtree_ends()
+    for el in idx.all:
+        below = {id(e) for e in el.iter_elements()}
+        interval = {id(e) for e in idx.all
+                    if el.order < e.order <= ends[el.order]}
+        assert below == interval, el.order
+
+
+@pytest.mark.parametrize("backend", ["fast", "stdlib"])
+@pytest.mark.parametrize("html", _RECOVERY_HTML)
+def test_subtree_is_its_preorder_interval_after_recovery(html, backend):
+    """DocIndex.within relies on a subtree being exactly the interval
+    (order, subtree_ends[order]] of the document-order element list,
+    including where tree recovery inserted, closed or reopened nodes."""
+    _assert_subtrees_are_intervals(parse_html(html, backend=backend), None)
+    _assert_subtrees_are_intervals(*parse_document(html, backend=backend))
+
+
+@settings(max_examples=40, deadline=None)
+@given(html=st.one_of(_doms(), _grid_doms()),
+       backend=st.sampled_from(["fast", "stdlib"]))
+def test_subtree_is_its_preorder_interval_random_doms(html, backend):
+    _assert_subtrees_are_intervals(parse_html(html, backend=backend), None)
+    _assert_subtrees_are_intervals(*parse_document(html, backend=backend))
+
+
+def _compound_checks_per_card(cards, monkeypatch):
+    from goose_parser_spark.rules.compiler import RuleCompiler
+    from goose_parser_spark.rules.evaluator import evaluate_document
+
+    rules = {"scope": "div.card", "collection": [[
+        {"name": "title", "scope": "h3.t a"},
+        {"name": "tags", "scope": "ul.tags li", "type": "array"},
+    ]]}
+    card = ('<div class="card"><h3 class="t"><a href="/p">t</a></h3>'
+            '<ul class="tags"><li>x</li><li>y</li><li>z</li></ul></div>')
+    html = ('<html><body><ul class="nav"><li><a href="/">home</a></li></ul>'
+            + card * cards + "</body></html>")
+    compiled = RuleCompiler().compile(rules)
+    calls = [0]
+    orig = selector_mod._matches_compound
+
+    def counting(el, comp):
+        calls[0] += 1
+        return orig(el, comp)
+
+    monkeypatch.setattr(selector_mod, "_matches_compound", counting)
+    out = evaluate_document(compiled, html)
+    assert out == [{"title": "t", "tags": ["x", "y", "z"]}] * cards
+    return calls[0] / cards
+
+
+def test_multi_step_grid_scopes_cost_constant_per_card(monkeypatch):
+    """A grid row's multi-step field scope ('h3.t a', 'ul.tags li')
+    verifies only the candidates inside its row: compound checks per
+    card stay flat as the page grows. Scanning the page's whole pool
+    for every row grows them with the card count."""
+    small = _compound_checks_per_card(50, monkeypatch)
+    large = _compound_checks_per_card(200, monkeypatch)
+    assert large <= 1.2 * small, (small, large)
