@@ -16,6 +16,7 @@ from goose_parser_spark.functions.transforms import (
     TransformRegistry,
     default_registry,
 )
+from goose_parser_spark.deploy import cache_zip_directories
 
 __version__ = "0.1.0"
 
@@ -27,3 +28,8 @@ __all__ = [
     "TransformRegistry",
     "default_registry",
 ]
+
+# executor closures import the package while their first task unpickles,
+# so a reused Python worker stops re-reading Spark's zip archives before
+# every task (deploy.cache_zip_directories)
+cache_zip_directories()

@@ -19,10 +19,20 @@ from __future__ import annotations
 import math
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql.types import IntegralType
 
 
 # one-shot flag for the implicit-approximate-default warning below
 _WARNED_DEFAULT_APPROX = False
+
+
+def _require_integral(df: DataFrame, col: str) -> None:
+    """The scorers carry ids as ``long``: reject any other id type
+    instead of letting the cast turn it into NULL."""
+    dtype = df.select(col).schema.fields[0].dataType
+    if not isinstance(dtype, IntegralType):
+        raise ValueError(f"id column {col!r} must be integral, "
+                         f"got {dtype.simpleString()}")
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -85,8 +95,12 @@ def cosine_topk_multi(
     the corpus × queries cross product. Rounding bounds cross-engine
     float drift for oracle comparison.
 
-    Columns: ``query_id, rank (1-based), vec_id, sim``.
+    Columns: ``query_id, rank (1-based), vec_id, sim``. Both id
+    columns must be integral (``ValueError`` otherwise); they come out
+    as ``long``.
     """
+    _require_integral(df, id_col)
+    _require_integral(queries, query_id_col)
     # r07 restructure (guide §4.2): the query workload is bounded (the
     # documented broadcast invariant — it was already collected to the
     # driver by the broadcast build), so pull it once and score each
@@ -349,6 +363,10 @@ def embedding_cosine_pairs(
 
     Pass ``dims`` to skip the one-row schema probe (a tiny driver
     action otherwise used to size the hyperplanes).
+
+    The LSH path needs an integral ``id_col`` (``ValueError``
+    otherwise) and emits ``long`` ids; the exact path carries ids as
+    they are.
     """
     if lsh_prefilter is None:
         global _WARNED_DEFAULT_APPROX
@@ -380,6 +398,7 @@ def embedding_cosine_pairs(
                 .where(F.col("sim") >= threshold)
                 .select("id_a", "id_b", "sim"))
 
+    _require_integral(df, id_col)
     if dims is None:
         dims = len(df.select(vec_col).head()[0])
     # one row per (vector, table): join key (table, bucket); table t

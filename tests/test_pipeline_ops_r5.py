@@ -100,6 +100,34 @@ def test_cosine_topk_multi_matches_single(spark):
             [(s["vec_id"], s["sim"]) for s in single]
 
 
+def test_vector_scorers_reject_non_integral_ids(spark):
+    """The scorers carry ids as long: a string (or fractional) id is
+    a ValueError naming the column, not ids cast to NULL. The exact
+    pair path keeps string ids as they are."""
+    import pytest
+    from goose_parser_spark.ops.similarity import (
+        cosine_topk_multi, embedding_cosine_pairs)
+    vecs = [(f"v{i}", float(i), [1.0, float(i % 3), 0.5])
+            for i in range(6)]
+    emb = spark.createDataFrame(
+        vecs, "vec_id string, score double, embedding array<double>")
+    long_ids = emb.select(F.col("score").cast("long").alias("vec_id"),
+                          "score", "embedding")
+    with pytest.raises(ValueError, match="'vec_id'"):
+        cosine_topk_multi(emb, long_ids.withColumnRenamed(
+            "vec_id", "query_id"), k=2)
+    with pytest.raises(ValueError, match="'query_id'"):
+        cosine_topk_multi(long_ids, emb.withColumnRenamed(
+            "vec_id", "query_id"), k=2)
+    with pytest.raises(ValueError, match="'score'"):
+        cosine_topk_multi(long_ids, long_ids, k=2, query_id_col="score")
+    with pytest.raises(ValueError, match="'vec_id'"):
+        embedding_cosine_pairs(emb, lsh_prefilter=True, dims=3)
+    exact = embedding_cosine_pairs(emb, threshold=0.99,
+                                   lsh_prefilter=False).collect()
+    assert exact and all(r["id_a"].startswith("v") for r in exact)
+
+
 def test_policy_filter_reasons_and_precedence(spark):
     """Domain block wins over badword; badwords match word-bounded
     case-insensitively ('Merge' yes, 'submerged' no); clean docs keep
