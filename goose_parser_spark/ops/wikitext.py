@@ -178,48 +178,48 @@ def read_wiki_dump(spark: "SparkSession", path: str) -> "DataFrame":
     → DataFrame ``(page_id, title, ns, redirect, wikitext)``. Same
     execution shape as the other compressed sources: the FILE is the
     unit of parallelism (a bz2 dump does not byte-split under a
-    generic reader), inflation is budget-bounded, page splitting and
-    field extraction run inside one map-only mapInPandas."""
-    import pandas as pd
+    generic reader), one document of ``kernel.map_docs`` whose rows
+    are its pages. The codec comes from the magic bytes (``BZh`` bz2,
+    ``1f 8b`` gzip, otherwise raw XML), and inflation is multi-member
+    and budget-bounded (1 GiB per shard).
 
-    from goose_parser_spark.deploy import ship_package
-    ship_package(spark)
+    A shard that fails to inflate — malformed, cut mid-member or over
+    budget — is skipped whole (best-effort, the kernel's poison
+    contract), as is a NULL content."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import (
+        IntegerType, LongType, StringType, StructField,
+    )
 
-    def run(batches):
-        from goose_parser_spark.sources.inflate import inflate_members
-        budget = 1 << 30
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "page_id": [], "title": [], "ns": [],
-                "redirect": [], "wikitext": []}
-            for pth, content in zip(pdf["path"], pdf["content"]):
-                if content is None:
-                    continue
-                data: bytes | None = bytes(content)
-                name = str(pth).lower()
-                # MULTI-member inflate: the standard Wikipedia dump
-                # is pages-articles-MULTISTREAM.xml.bz2 — many bz2
-                # streams back to back; decoding only the first
-                # silently dropped all but ~100 pages (code-review
-                # finding, regression-pinned)
-                if name.endswith(".bz2"):
-                    data = inflate_members(data, "bz2", budget)
-                elif name.endswith(".gz"):
-                    data = inflate_members(data, "gz", budget)
-                if data is None:
-                    continue
-                for page in iter_wiki_pages(data):
-                    for k, v in page.items():
-                        rows[k].append(v)
-            yield pd.DataFrame(rows)
+    from goose_parser_spark.kernel import map_docs
+    from goose_parser_spark.sources.inflate import inflate_members
 
-    raw = (spark.read.format("binaryFile")
-           .option("pathGlobFilter", "*.xml*")
-           .load(path)
-           .select("path", "content"))
-    return raw.mapInPandas(
-        run, schema="page_id long, title string, ns int, "
-                    "redirect string, wikitext string")
+    fields = [StructField("page_id", LongType(), True),
+              StructField("title", StringType(), True),
+              StructField("ns", IntegerType(), True),
+              StructField("redirect", StringType(), True),
+              StructField("wikitext", StringType(), True)]
+
+    def pages(data: bytes) -> tuple:
+        # MULTI-member inflate: the standard Wikipedia dump is
+        # pages-articles-MULTISTREAM.xml.bz2 — many bz2 streams back
+        # to back; decoding only the first silently dropped all but
+        # ~100 pages (code-review finding, regression-pinned)
+        codec = ("bz2" if data[:3] == b"BZh"
+                 else "gz" if data[:2] == b"\x1f\x8b" else None)
+        if codec is not None:
+            data = inflate_members(data, codec, 1 << 30)
+            if data is None:
+                raise ValueError(f"{codec} shard failed to inflate")
+        return tuple((p["page_id"], p["title"], p["ns"], p["redirect"],
+                      p["wikitext"]) for p in iter_wiki_pages(data))
+
+    files = (spark.read.format("binaryFile")
+             .option("pathGlobFilter", "*.xml*")
+             .load(path))
+    return (map_docs(files, pages, fields, "path", "content")
+            .where(F.col("error").isNull())
+            .select(*(f.name for f in fields)))
 
 
 def wiki_clean(df: "DataFrame", text_col: str = "wikitext",

@@ -3,10 +3,13 @@
 Implements the engine-infra operators the north rule requires on top
 of the reference's capabilities (SURVEY.md §2.8, BASELINE.json:14):
 
-I1  Salted repartition by url-hash — deterministic
-    ``pmod(xxhash64(url), B)`` buckets with ``B = partitions ×
-    salt_factor`` so host-level skew can't pile onto one task, and no
-    ``rand()`` so resume stays stable across runs.
+I1  Url-hash bucketing — every row gets a deterministic
+    ``bucket = pmod(xxhash64(url), buckets)`` column, and
+    ``ExtractJob.run`` (``salt_shuffle=True``, the default)
+    repartitions on ``bucket`` into ``min(buckets, max(32, 2 ×
+    parallelism))`` partitions before extraction, so host-level skew
+    can't pile onto one task, each bucket lands wholly in one task,
+    and no ``rand()`` keeps resume stable across runs.
 I2  Per-partition lineage + metrics — one row per bucket with
     docs_in/ok/failed, bytes, parse time, engine version and the
     rules' sha256, written alongside the output.
@@ -66,25 +69,6 @@ def with_bucket(df: DataFrame, buckets: int, url_col: str = "url",
         raise ValueError(f"unknown hash_mode: {hash_mode!r}")
     return df.withColumn(
         "bucket", F.pmod(h, F.lit(buckets)).cast("int")
-    )
-
-
-def salted_repartition(
-    df: DataFrame,
-    num_partitions: int,
-    salt_factor: int = 4,
-    url_col: str = "url",
-) -> DataFrame:
-    """I1: repartition on ``pmod(xxhash64(url), P × salt_factor)``.
-
-    url-hash (not host) already decorrelates host-level skew; the salt
-    factor over-decomposes so AQE / the scheduler can re-balance
-    residual heavy buckets. Deterministic — no ``rand()`` — so the
-    partition a url lands in is stable across retries and resume.
-    """
-    b = num_partitions * salt_factor
-    return df.repartition(
-        num_partitions, F.pmod(F.xxhash64(F.col(url_col)), F.lit(b))
     )
 
 

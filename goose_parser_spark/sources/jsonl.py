@@ -52,58 +52,9 @@ def read_pages_jsonl(spark: "SparkSession", path: str,
     return df
 
 
-def read_pages_jsonl_zst(spark: "SparkSession", path: str,
-                         schema: StructType | None = None) -> "DataFrame":
-    """``.jsonl.zst`` shards → pages DataFrame. Datasets are commonly
-    distributed as zstd-compressed JSONL; Spark's text source only
-    inflates Hadoop-registered codecs (gzip), so like WARC the unit
-    of parallelism is the FILE: one binaryFile task per shard (a zstd
-    stream cannot be byte-split), the pure-stdlib RFC 8878 decoder
-    (ops/zstdcodec.py) inflates inside mapInPandas, and lines parse
-    with ``from_json`` under the EXPLICIT wire schema — same
-    no-inference contract as :func:`read_pages_jsonl`. A shard that
-    fails to inflate yields no rows (best-effort, same as a WARC
-    member that fails to parse); per-doc budget is the caller-tuned
-    ``max_out``."""
-    import pandas as pd
-
-    from goose_parser_spark.deploy import ship_package
-    ship_package(spark)
-    sch = schema or JSONL_PAGES_SCHEMA
-
-    def run(batches):
-        from goose_parser_spark.ops.zstdcodec import (
-            ZstdError, decode_frames)
-        for pdf in batches:
-            lines: list[str] = []
-            for content in pdf["content"]:
-                if content is None:
-                    continue
-                try:
-                    data, _, _ = decode_frames(
-                        bytes(content), max_out=1 << 30,
-                        verify_checksum=False)
-                except ZstdError:
-                    continue
-                lines.extend(data.decode("utf-8", "replace").splitlines())
-            yield pd.DataFrame({"value": lines})
-
-    raw = (spark.read.format("binaryFile")
-           .option("pathGlobFilter", "*.jsonl.zst")
-           .load(path)
-           .select("content"))
-    text = raw.mapInPandas(run, schema="value string")
-    df = (text.select(F.from_json("value", sch).alias("j"))
-          .select("j.*"))
-    if "html_b64" in df.columns:
-        df = (df.withColumn("html", F.unbase64(F.col("html_b64")))
-              .drop("html_b64"))
-    return df
-
-
 # per-shard inflate budget: datasets ship multi-hundred-MB shards,
 # but a shard that inflates past 1 GiB in one task is either a bomb
-# or mis-sharded — skipped, not OOM'd (same stance as the zst path).
+# or mis-sharded — skipped, not OOM'd.
 _SHARD_BUDGET = 1 << 30
 
 
@@ -146,13 +97,20 @@ def read_pages_jsonl_compressed(
     directory are fine) → pages DataFrame. Covers what corpora are
     actually distributed as: Common Crawl derivative JSONL (gz/zst),
     academic dumps (bz2 — e.g. Wikipedia-derived exports), HF-style
-    xz shards, and br-armored exports. Same execution shape as
-    :func:`read_pages_jsonl_zst`: the FILE is the unit of parallelism
-    (none of these streams byte-split safely under a generic reader),
-    inflate is budget-bounded per shard inside one map-only
-    mapInPandas, and lines parse with ``from_json`` under the
-    EXPLICIT wire schema. A shard that fails to inflate yields no
-    rows (best-effort)."""
+    xz shards, and br-armored exports. Spark's text source only
+    inflates Hadoop-registered codecs (gzip), so like WARC the FILE
+    is the unit of parallelism (none of these streams byte-split
+    safely under a generic reader): inflate is budget-bounded per
+    shard inside one map-only mapInPandas, and lines parse with
+    ``from_json`` under the EXPLICIT wire schema — same no-inference
+    contract as :func:`read_pages_jsonl`. A shard that fails to
+    inflate — malformed, cut mid-member, over budget or of an
+    unknown suffix — yields no rows (best-effort).
+
+    This reader keeps its own batch loop rather than running on
+    ``kernel.map_docs``: the codec comes from the file NAME, and
+    brotli has no magic number, so a per-payload ``fn`` could not
+    tell a ``.br`` shard from raw bytes."""
     import os
 
     import pandas as pd

@@ -8,16 +8,18 @@ distribution model:
   ``read_warc`` therefore reads via Spark's ``binaryFile`` source (one
   task per file; a CC segment has ~64k files, far more than any
   cluster's cores → full parallelism without splitting) and parses
-  records inside ``mapInArrow``, the same Arrow-batched boundary the
-  extractor uses.
+  records inside ``kernel.map_docs``, the same Arrow-batched boundary
+  and poison contract the extractor uses: a file is a document whose
+  rows are its records.
 - Records stream out as (url, warc_ts, record_type, content_type,
   html) rows matching the input-hint page schema; ``response``
   records carry the HTTP payload with headers stripped.
 
-At 100 TB: pair with ``ExtractJob`` — read_warc → salted repartition
-→ extract → partitioned write. The binaryFile row carries the whole
-file in memory once; CC files are ~1 GB compressed, so size executor
-memory accordingly or pre-split with maxRecordsPerFile on re-landing.
+At 100 TB: pair with ``ExtractJob`` — read_warc → repartition on the
+url-hash bucket → extract → partitioned write. The binaryFile row
+carries the whole file in memory once; CC files are ~1 GB compressed,
+so size executor memory accordingly or pre-split with
+maxRecordsPerFile on re-landing.
 """
 
 from __future__ import annotations
@@ -277,23 +279,25 @@ def read_warc(
 ) -> "DataFrame":
     """Distributed WARC read: one task per ``.warc``/``.warc.gz``/
     ``.warc.zst`` file (binaryFile source; zstd inflated by the
-    pure-stdlib RFC 8878 decoder), record parsing inside mapInArrow.
-    Returns
+    pure-stdlib RFC 8878 decoder), each file one document of
+    ``kernel.map_docs`` whose rows are its records. Returns
     ``url, warc_ts (timestamp), record_type, content_type, html
     (binary)`` — the input-hint page shape, ready for ``extract``.
+    An empty ``record_types`` keeps every record.
     With ``keep_http_headers`` the stripped HTTP response head rides
     along as an ``http_headers`` string column, feeding
     ``ops.crawl.parse_http_headers`` (the status/content-type gate)
     without a second pass over the archive.
+
+    A file that fails to parse — a ``.warc.gz`` cut short or with a
+    corrupt member — is skipped whole (best-effort, the kernel's
+    poison contract), as is a NULL content; the job never fails on
+    one damaged download.
     """
-    import pyarrow as pa
     from pyspark.sql import functions as F
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import (
-        BinaryType, StringType, StructField, StructType, TimestampType,
-    )
-    from goose_parser_spark.deploy import ship_package
-    ship_package(spark)
+    from pyspark.sql.types import BinaryType, StringType, StructField
+
+    from goose_parser_spark.kernel import map_docs
 
     fields = [
         StructField("url", StringType(), True),
@@ -302,48 +306,23 @@ def read_warc(
         StructField("content_type", StringType(), True),
         StructField("html", BinaryType(), True),
     ]
+    keys = ["url", "warc_ts", "record_type", "content_type", "payload"]
     if keep_http_headers:
         fields.append(StructField("http_headers", StringType(), True))
-    out_schema = StructType(fields)
-    arrow_schema = to_arrow_schema(out_schema)
+        keys.append("http_headers")
     wanted = set(record_types)
 
-    def parse_files(batches):
-        for batch in batches:
-            names = batch.schema.names
-            contents = batch.column(names.index("content"))
-            cols = ("url", "warc_ts", "record_type", "content_type",
-                    "html") + (("http_headers",) if keep_http_headers
-                               else ())
-            rows = {k: [] for k in cols}
-            for i in range(batch.num_rows):
-                raw = contents[i].as_py()
-                if raw is None:
-                    continue
-                for rec in iter_warc_records(raw):
-                    if wanted and rec["record_type"] not in wanted:
-                        continue
-                    rows["url"].append(rec["url"])
-                    rows["warc_ts"].append(rec["warc_ts"])
-                    rows["record_type"].append(rec["record_type"])
-                    rows["content_type"].append(rec["content_type"])
-                    rows["html"].append(rec["payload"])
-                    if keep_http_headers:
-                        rows["http_headers"].append(rec["http_headers"])
-            arrays = [pa.array(rows["url"], pa.string()),
-                      pa.array(rows["warc_ts"], pa.string()),
-                      pa.array(rows["record_type"], pa.string()),
-                      pa.array(rows["content_type"], pa.string()),
-                      pa.array(rows["html"], pa.binary())]
-            if keep_http_headers:
-                arrays.append(pa.array(rows["http_headers"], pa.string()))
-            yield pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
+    def records(raw: bytes) -> tuple:
+        return tuple(
+            tuple(rec[k] for k in keys) for rec in iter_warc_records(raw)
+            if not wanted or rec["record_type"] in wanted)
 
     files = (spark.read.format("binaryFile")
              .option("pathGlobFilter", "*.warc*")
-             .load(path)
-             .select("content"))
-    parsed = files.mapInArrow(parse_files, schema=out_schema)
+             .load(path))
+    parsed = (map_docs(files, records, fields, "path", "content")
+              .where(F.col("error").isNull())
+              .select(*(f.name for f in fields)))
     # ISO-8601 WARC-Date → timestamp, matching the input-hint schema
     return parsed.withColumn(
         "warc_ts",
@@ -404,7 +383,7 @@ def read_wet(spark: "SparkSession", path: str) -> "DataFrame":
     wet = read_warc(spark, path, record_types=("conversion",))
     return wet.select(
         "url", "warc_ts",
-        F.decode(F.col("html"), "UTF-8").alias("text"))
+        F.make_valid_utf8(F.col("html").cast("string")).alias("text"))
 
 
 def write_warc(

@@ -1,4 +1,4 @@
-"""Infra tests: salted repartition (I1), metrics/lineage (I2),
+"""Infra tests: url-hash bucketing (I1), metrics/lineage (I2),
 checkpoint resume (I3) — SURVEY.md §2.8, BASELINE.json:14."""
 
 import glob
@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 from goose_parser_spark.plans.pipeline import (
     ExtractJob,
     rules_sha256,
-    salted_repartition,
     with_bucket,
 )
 from goose_parser_spark.sources.fixtures import FAMILIES, pages_rows, pages_schema
@@ -33,17 +32,6 @@ def test_bucket_is_deterministic_jvm_side(spark, pages_df):
     plan = with_bucket(pages_df, 64)._jdf.queryExecution().executedPlan().toString()
     assert "xxhash64" in plan.lower()
     assert "pythonudf" not in plan.lower().replace(" ", "")
-
-
-def test_salted_repartition_spreads_skewed_hosts(spark, pages_df):
-    """20% of fixture urls share one host; url-hash bucketing must
-    still spread rows near-uniformly across partitions."""
-    reparted = salted_repartition(pages_df, 8, salt_factor=4)
-    sizes = (reparted.withColumn("pid", F.spark_partition_id())
-             .groupBy("pid").count().collect())
-    counts = [r["count"] for r in sizes]
-    assert len(counts) == 8
-    assert max(counts) <= 3 * (N // 8), counts  # no pathological pile-up
 
 
 def test_job_writes_data_and_metrics(spark, pages_df, tmp_path):

@@ -242,6 +242,44 @@ def test_warc_source_end_to_end(spark, tmp_path):
     assert got == {f"https://w.test/{i}": f"doc {i}" for i in range(3)}
 
 
+def _warc_pages(prefix, n):
+    return [{"url": f"https://{prefix}.test/{i}",
+             "warc_ts": f"2025-03-01T10:00:{i:02d}Z",
+             "payload": f"<html><body>{prefix} {i}</body></html>".encode()}
+            for i in range(n)]
+
+
+def _read_warc_beside_good_file(spark, tmp_path, damaged):
+    """Read a directory holding ``damaged`` and an intact shard; the
+    damaged bytes must fail the parser on their own."""
+    from goose_parser_spark.sources.warc import (
+        iter_warc_records, read_warc, write_warc_bytes)
+    with pytest.raises(Exception):
+        list(iter_warc_records(damaged))
+    good = _warc_pages("good", 4)
+    (tmp_path / "good.warc.gz").write_bytes(write_warc_bytes(good))
+    (tmp_path / "bad.warc.gz").write_bytes(damaged)
+    got = sorted((r["url"], bytes(r["html"]))
+                 for r in read_warc(spark, str(tmp_path)).collect())
+    assert got == [(r["url"], r["payload"]) for r in good]
+
+
+def test_read_warc_skips_truncated_gzip_file(spark, tmp_path):
+    """A .warc.gz cut short (a partial download) is skipped whole; the
+    job and the intact file beside it are unaffected."""
+    from goose_parser_spark.sources.warc import write_warc_bytes
+    raw = write_warc_bytes(_warc_pages("cut", 3))
+    _read_warc_beside_good_file(spark, tmp_path, raw[:-30])
+
+
+def test_read_warc_skips_bit_flipped_gzip_member(spark, tmp_path):
+    """One flipped byte inside a gzip member fails that file only."""
+    from goose_parser_spark.sources.warc import write_warc_bytes
+    raw = bytearray(write_warc_bytes(_warc_pages("flip", 3)))
+    raw[40] ^= 0xFF  # inside the first member's deflate stream
+    _read_warc_beside_good_file(spark, tmp_path, bytes(raw))
+
+
 def test_jsonl_pages_roundtrip(spark, tmp_path):
     """JSONL interchange: write pages (binary html → base64), read them
     back byte-identically, and extract through the engine."""
@@ -282,6 +320,20 @@ def test_read_wet_conversion_records(spark, tmp_path):
     assert len(out) == 5
     assert out[0]["text"] == "extracted text 0\nsecond line"
     assert out[0]["url"] == "https://w.test/0"
+
+
+def test_read_wet_replaces_invalid_utf8(spark, tmp_path):
+    """Invalid UTF-8 in a conversion record becomes U+FFFD instead of
+    failing the job (Spark's decode() throws on malformed input)."""
+    from goose_parser_spark.sources.warc import read_wet, write_warc_bytes
+    recs = [{"url": "https://w.test/bad", "warc_ts": "2024-01-01T00:00:00Z",
+             "record_type": "conversion", "payload": b"caf\xe9 ok \xff\xfe"},
+            {"url": "https://w.test/ok", "warc_ts": "2024-01-01T00:00:00Z",
+             "record_type": "conversion", "payload": "café".encode()}]
+    (tmp_path / "f.warc.gz").write_bytes(write_warc_bytes(recs))
+    got = {r["url"]: r["text"] for r in read_wet(spark, str(tmp_path)).collect()}
+    assert got == {"https://w.test/bad": "caf\ufffd ok \ufffd\ufffd",
+                   "https://w.test/ok": "café"}
 
 
 def test_write_warc_roundtrip(spark, tmp_path):

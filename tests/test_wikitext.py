@@ -141,3 +141,30 @@ def test_multistream_bz2_dump_reads_all_pages(spark, tmp_path):
         bz2.compress(s1) + bz2.compress(s2))
     rows = {r.page_id for r in read_wiki_dump(spark, str(tmp_path)).collect()}
     assert rows == {1, 2, 3}
+
+
+def test_read_wiki_dump_skips_garbage_bz2_shard(spark, tmp_path):
+    """A .xml.bz2 shard that is garbage after its BZh header is skipped
+    whole; the intact shard beside it reads unchanged."""
+    from goose_parser_spark.ops.wikitext import read_wiki_dump
+    (tmp_path / "good.xml").write_bytes(
+        _dump([_page(1, "One", "alpha"), _page(2, "Two", "beta")]))
+    (tmp_path / "bad.xml.bz2").write_bytes(
+        b"BZh9" + bytes(random.Random(5).randrange(256) for _ in range(512)))
+    rows = sorted(tuple(r) for r in read_wiki_dump(spark, str(tmp_path))
+                  .collect())
+    assert rows == [(1, "One", 0, None, "alpha"), (2, "Two", 0, None, "beta")]
+
+
+def test_read_wiki_dump_codec_from_magic_bytes(spark, tmp_path):
+    """The codec comes from the content, not the name: gzip bytes under
+    a plain .xml name inflate, beside an intact raw shard."""
+    import gzip
+
+    from goose_parser_spark.ops.wikitext import read_wiki_dump
+    (tmp_path / "good.xml").write_bytes(_dump([_page(1, "One", "alpha")]))
+    (tmp_path / "misnamed.xml").write_bytes(
+        gzip.compress(_dump([_page(2, "Two", "beta")])))
+    rows = sorted(tuple(r) for r in read_wiki_dump(spark, str(tmp_path))
+                  .collect())
+    assert rows == [(1, "One", 0, None, "alpha"), (2, "Two", 0, None, "beta")]

@@ -342,7 +342,7 @@ def test_read_pages_jsonl_zst(spark, tmp_path):
     html restored to binary."""
     import json
 
-    from goose_parser_spark.sources.jsonl import read_pages_jsonl_zst
+    from goose_parser_spark.sources.jsonl import read_pages_jsonl_compressed
 
     Z = spark._jvm.com.github.luben.zstd.Zstd
     lines = "\n".join(json.dumps({
@@ -351,7 +351,7 @@ def test_read_pages_jsonl_zst(spark, tmp_path):
         "text": f"doc {i}", "lang": "en"}) for i in range(9))
     (tmp_path / "shard-0.jsonl.zst").write_bytes(
         bytes(Z.compress(lines.encode(), 9)))
-    df = read_pages_jsonl_zst(spark, str(tmp_path))
+    df = read_pages_jsonl_compressed(spark, str(tmp_path))
     rows = sorted((r.url, bytes(r.html), r.text) for r in df.collect())
     assert len(rows) == 9
     assert rows[3] == ("https://ex.com/j3", b"<p>3</p>", "doc 3")
