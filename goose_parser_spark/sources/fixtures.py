@@ -217,11 +217,6 @@ def expected_for(i: int) -> str:
     return _canon(family_of(i).expected(i))
 
 
-def expected_rows(n: int) -> list[dict]:
-    return [{"url": url_of(i), "extracted_json": expected_for(i)}
-            for i in range(n)]
-
-
 def write_pages_parquet(path: str, n: int) -> None:
     """Write the fixture pages table with plain pyarrow (no Spark
     needed — used by bench setup and test fixtures)."""

@@ -12,10 +12,17 @@ session 6). This helper loops members until the input is exhausted,
 carries one output budget across all of them, and REJECTS streams
 whose final member never reaches EOF (a shard cut mid-transfer is
 corruption, not content).
+
+zstd and brotli go through :func:`inflate_stream` instead: pyarrow
+ships libzstd and libbrotlidec, and its ``CompressedInputStream``
+already decodes concatenated frames / streams, so only the output
+budget is this module's job there.
 """
 from __future__ import annotations
 
-__all__ = ["inflate_members"]
+__all__ = ["inflate_members", "inflate_stream"]
+
+_STREAM_CHUNK = 1 << 20
 
 
 def inflate_members(data: bytes, codec: str, budget: int) -> bytes | None:
@@ -48,3 +55,31 @@ def inflate_members(data: bytes, codec: str, budget: int) -> bytes | None:
     except Exception:  # noqa: BLE001 — malformed member
         return None
     return bytes(out)
+
+
+def inflate_stream(data: bytes, codec: str, max_out: int,
+                   error: type[Exception]) -> bytes:
+    """Decode ``data`` with pyarrow's ``codec`` (``zstd`` or
+    ``brotli``), reading ~1 MiB at a time so a bomb is stopped as
+    soon as the output passes ``max_out`` (``error`` whose message
+    says "budget"), never sized up front. Decode failures raise
+    ``error``; anything else propagates — a pyarrow built without the
+    codec raises ``ArrowNotImplementedError``, which must not pass
+    for a corrupt stream."""
+    import pyarrow as pa
+
+    chunks = []
+    total = 0
+    try:
+        with pa.CompressedInputStream(pa.py_buffer(data), codec) as stream:
+            while True:
+                chunk = stream.read(min(_STREAM_CHUNK, max_out + 1 - total))
+                if not chunk:
+                    break
+                total += len(chunk)
+                if total > max_out:
+                    raise error("output budget exceeded")
+                chunks.append(chunk)
+    except (OSError, pa.ArrowInvalid) as exc:
+        raise error(f"{codec} decode failed: {exc}") from exc
+    return b"".join(chunks)

@@ -64,19 +64,20 @@ def _inflate_shard(name: str, content: bytes) -> bytes | None:
     (sources/inflate.py): real shards are often concatenated members
     (``cat a.gz b.gz``, pbzip2 output) and the first-member-only
     stdlib shortcut silently dropped everything after member one —
-    a code-review finding, now regression-pinned. zst and br ride
-    the house pure-stdlib decoders (already multi-frame); a bare
-    .jsonl passes through. Returns None (shard skipped, best-effort
-    contract) on malformed, truncated-mid-member or over-budget
-    streams."""
+    a code-review finding, now regression-pinned. zst and br decode
+    through libzstd / libbrotlidec from pyarrow (ops/zstdcodec.py,
+    ops/brotlicodec.py; concatenated frames and streams included); a
+    bare .jsonl passes through. Returns None (shard skipped,
+    best-effort contract) on malformed, truncated-mid-member or
+    over-budget streams, and on a zstd frame whose content checksum
+    does not match."""
     suffix = name.rsplit(".", 1)[-1].lower()
     try:
         if suffix == "jsonl":
             return content
         if suffix == "zst":
             from goose_parser_spark.ops.zstdcodec import decode_frames
-            data, _, _ = decode_frames(content, max_out=_SHARD_BUDGET,
-                                       verify_checksum=False)
+            data, _, _ = decode_frames(content, max_out=_SHARD_BUDGET)
             return data
         if suffix == "br":
             from goose_parser_spark.ops.brotlicodec import decompress
@@ -85,7 +86,7 @@ def _inflate_shard(name: str, content: bytes) -> bytes | None:
             from goose_parser_spark.sources.inflate import (
                 inflate_members)
             return inflate_members(content, suffix, _SHARD_BUDGET)
-    except Exception:  # noqa: BLE001 — malformed shard: skip
+    except ValueError:  # ZstdError, BrotliError: malformed shard, skip
         return None
     return None  # unknown suffix
 

@@ -91,11 +91,6 @@ def _split_http_payload(payload: bytes) -> tuple[str | None, bytes]:
     return None, payload
 
 
-def _strip_http_headers(payload: bytes) -> bytes:
-    """Drop the HTTP response envelope from a response record body."""
-    return _split_http_payload(payload)[1]
-
-
 def _http_header_value(head: str, name: str) -> str | None:
     import re
     m = re.search(rf"(?im)^{name}[ \t]*:[ \t]*([^\r\n]*)", head)
@@ -163,10 +158,12 @@ def decode_http_body(head: str | None, body: bytes) -> bytes:
     interleaves chunk-size lines into the markup, or feeds it gzip
     noise). Chunked framing first, then Content-Encoding gzip or
     deflate (both zlib-wrapped and raw, as servers disagree), zstd
-    (RFC 8878 via the pure-stdlib decoder in ops/zstdcodec.py) or
-    brotli (RFC 7932 via ops/brotlicodec.py). Every step is
-    best-effort and bounded: malformed framing or a decompression
-    bomb keeps the bytes as they arrived."""
+    (RFC 8878, ops/zstdcodec.py) or brotli (RFC 7932,
+    ops/brotlicodec.py), both decoded by the libzstd / libbrotlidec
+    pyarrow ships. Every step is best-effort and bounded: malformed
+    framing, a decompression bomb, a zstd frame whose content
+    checksum does not match, or bytes after a brotli stream's end
+    keep the bytes as they arrived."""
     if not head or not body:
         return body
     te = _http_header_value(head, "transfer-encoding")
@@ -188,8 +185,7 @@ def decode_http_body(head: str | None, body: bytes) -> bytes:
     elif ce == "zstd":
         from goose_parser_spark.ops.zstdcodec import ZstdError, decompress
         try:
-            body = decompress(body, max_out=_MAX_PAYLOAD,
-                              verify_checksum=False)
+            body = decompress(body, max_out=_MAX_PAYLOAD)
         except ZstdError:
             pass  # best-effort: malformed/bomb keeps raw bytes
     elif ce == "br":
@@ -208,10 +204,11 @@ def iter_warc_records(raw: bytes) -> Iterator[dict]:
     ``gzip.GzipFile`` over the whole stream handles concatenated
     members transparently), or zstd ``.warc.zst`` (record-per-frame
     or whole-file frames both arrive as concatenated frames, which
-    ops/zstdcodec.decode_frames inflates in one bounded pass;
-    dictionary-bearing archives — the IIPC layout's skippable-frame
-    dictionary — are rejected by the decoder and fall through to an
-    empty record stream rather than mis-parsing). Each dict: url,
+    ops/zstdcodec.decode_frames inflates in one bounded pass through
+    libzstd). A ``.warc.zst`` that fails to decode yields no records
+    rather than mis-parsing: dictionary-bearing archives (the IIPC
+    layout's skippable-frame dictionary), a frame whose content
+    checksum does not match, truncation and bombs alike. Each dict: url,
     warc_ts, record_type, content_type, payload (HTTP headers
     stripped for responses)."""
     if raw[:2] == b"\x1f\x8b":
@@ -224,8 +221,7 @@ def iter_warc_records(raw: bytes) -> Iterator[dict]:
                 # whole-file buffer: the binaryFile model already holds
                 # the compressed file; cap the inflated copy at 32x the
                 # per-record payload budget (CC files are ~1 GB raw)
-                inflated, _, _ = decode_frames(
-                    raw, max_out=32 * _MAX_PAYLOAD, verify_checksum=False)
+                inflated, _, _ = decode_frames(raw, max_out=32 * _MAX_PAYLOAD)
             except ZstdError:
                 return
             fh = io.BytesIO(inflated)

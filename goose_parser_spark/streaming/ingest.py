@@ -175,11 +175,6 @@ def stream_windowed_counts(
     return writer.start()
 
 
-def run_stream_to_completion(query) -> None:
-    """Block until an availableNow stream drains its backlog."""
-    query.awaitTermination()
-
-
 def stream_sessionize(
     spark: SparkSession,
     input_dir: str,

@@ -50,7 +50,6 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     p.add_argument("--lang", default=None, help="filter pages.lang (pushed down)")
     p.add_argument("--since", default=None, help="min warc_ts (pushed down)")
     p.add_argument("--until", default=None, help="max warc_ts (pushed down)")
-    p.add_argument("--salt-factor", type=int, default=4)
     return p.parse_args(argv)
 
 

@@ -1,4 +1,5 @@
-"""Pure-stdlib zstd decoder (ops/zstdcodec.py) — validation + fuzz.
+"""zstd decoding (ops/zstdcodec.py: frame walker + libzstd from
+pyarrow) — validation + fuzz.
 
 Three INDEPENDENT external pins (the round-6 codec lesson: every
 codec needs evidence outside its own test encoders):
@@ -14,9 +15,10 @@ codec needs evidence outside its own test encoders):
 3. Host ``.conda`` archives (real conda-authored multi-frame zstd)
    when present — skipped cleanly elsewhere.
 
-Plus: xxh64 against its published test vectors, hand-authored frames
-for the SQL-oracle-visible subset (raw / RLE / compressed blocks
-with raw literals), and the fuzz battery every binary parser in this
+Plus: hand-authored frames for the SQL-oracle-visible subset (raw /
+RLE / compressed blocks with raw literals; checksums from lz4-java's
+XXHash64 in Spark's JVM), the checksum contract every caller keeps,
+and the fuzz battery every binary parser in this
 repo gets (truncation, bit flips, decompression bombs vs the
 ``max_out`` budget — must raise ZstdError, never hang or OOM).
 """
@@ -33,7 +35,7 @@ import zipfile
 import pytest
 
 from goose_parser_spark.ops.zstdcodec import (
-    ZstdError, decode_frames, decompress, is_zstd, xxh64)
+    ZstdError, decode_frames, decompress, is_zstd)
 
 # libarchive 3.8.2 public test archive (info/recipe/test-archives/
 # hello_world.tar.zst) — authored by the real zstd CLI, carries a
@@ -43,16 +45,6 @@ HELLO_TAR_ZST = base64.b64decode(
     "KLUv/WQACQ0EADKGExegNwWETThAaNqCzP8XQKZ/ayU9fp1ZKYTVyty81C5wF/sOBDEVWolY"
     "JHXIRMNAJ7WVCMhhqFvdd6m55/d8gmJt7+w3bQtwMqFkgDKxCBMAjuU/gLiVDghsGVAfaBiE"
     "Q8BUAwQHJKAANgugvcAugBICkAQIC2iAwyutQRP4AjxO/YY=")
-
-
-def test_xxh64_published_vectors():
-    # xxHash's documented sanity vectors (seed 0)
-    assert xxh64(b"") == 0xEF46DB3751D8E999
-    assert xxh64(b"a") == 0xD24EC4F1A98C6E5B
-    assert xxh64(b"abc") == 0x44BC2CF5AD770999
-    # >=32-byte path pinned against lz4-java's XXHash64 (independent
-    # implementation, bundled in Spark's JVM)
-    assert xxh64(b"a" * 101) == 0x05D162FA42C9EA90
 
 
 def test_external_fixture_checksum_and_tar():
@@ -161,23 +153,33 @@ def _compressed_raw_literals_block(data: bytes, last: bool) -> bytes:
     return bh.to_bytes(3, "little") + content
 
 
+def _xxh64(spark, data: bytes) -> int:
+    """xxHash64 (seed 0) by lz4-java, which Spark's JVM bundles: frame
+    checksums come from outside the decoder under test."""
+    h = spark._jvm.net.jpountz.xxhash.XXHashFactory \
+        .fastestJavaInstance().hash64()
+    return h.hash(data, 0, len(data), 0)
+
+
 def _frame(blocks: bytes, content: bytes | None = None,
-           checksum: bool = False) -> bytes:
-    fhd = 0x20 | (0x04 if checksum else 0)  # single-segment, 1-byte FCS
+           spark=None) -> bytes:
+    """Single-segment frame with a 1-byte FCS; given ``spark``, it
+    carries a content checksum."""
+    fhd = 0x20 | (0x04 if spark is not None else 0)
     size = len(content) if content is not None else 0
     assert size < 256
     out = struct.pack("<IBB", 0xFD2FB528, fhd, size) + blocks
-    if checksum:
-        out += struct.pack("<I", xxh64(content or b"") & 0xFFFFFFFF)
+    if spark is not None:
+        out += struct.pack("<I", _xxh64(spark, content or b"") & 0xFFFFFFFF)
     return out
 
 
-def test_authored_multi_block_frame():
+def test_authored_multi_block_frame(spark):
     content = b"0123456789abcdef" + b"QQQQQQQQ" + b"tail"
     blocks = (_raw_block(b"0123456789abcdef", False)
               + _rle_block(ord("Q"), 8, False)
               + _compressed_raw_literals_block(b"tail", True))
-    frame = _frame(blocks, content, checksum=True)
+    frame = _frame(blocks, content, spark)
     got, n, cstate = decode_frames(frame)
     assert got == content
     assert (n, cstate) == (1, "ok")
@@ -192,14 +194,11 @@ def test_multi_frame_with_skippable():
     assert (n, cstate) == (2, "absent")
 
 
-def test_checksum_mismatch_raises_and_reports():
-    frame = bytearray(_frame(_raw_block(b"abc", True), b"abc",
-                             checksum=True))
+def test_checksum_mismatch_raises_and_reports(spark):
+    frame = bytearray(_frame(_raw_block(b"abc", True), b"abc", spark))
     frame[-1] ^= 0xFF
     with pytest.raises(ZstdError, match="checksum"):
         decompress(bytes(frame))
-    _, _, cstate = decode_frames(bytes(frame), verify_checksum=False)
-    assert cstate == "bad"
 
 
 def test_declared_content_size_enforced():
@@ -376,3 +375,97 @@ def test_zstd_text_poison_rows_and_non_zstd_errors(spark):
                                     "doc_id long, payload string")
     (row,) = zstd_text(strings).collect()
     assert (row["doc_id"], row["n_frames"], row["content_len"]) == (4, -1, None)
+
+
+def _checksummed(spark, data: bytes) -> bytes:
+    """zstd-jni output WITH a content checksum (Zstd.compress has
+    none)."""
+    ctx = spark._jvm.com.github.luben.zstd.ZstdCompressCtx()
+    ctx.setLevel(3)
+    ctx.setChecksum(True)
+    return bytes(ctx.compress(data))
+
+
+def test_bad_checksum_is_a_decode_error_for_every_caller(spark, tmp_path):
+    """libzstd always verifies frame checksums: a frame with one flipped
+    checksum byte poisons its zstd_text row, leaves an HTTP body raw
+    and gets its .warc.zst / .jsonl.zst file skipped, while the good
+    sibling of each decodes unchanged."""
+    import json
+
+    from goose_parser_spark.ops.zstdcodec import zstd_text
+    from goose_parser_spark.sources.jsonl import read_pages_jsonl_compressed
+    from goose_parser_spark.sources.warc import (
+        decode_http_body, read_warc, write_warc_bytes)
+
+    def flipped(frame: bytes) -> bytes:
+        return frame[:-1] + bytes([frame[-1] ^ 0xFF])
+
+    page = b"<p>checksummed page</p>"
+    good = _checksummed(spark, page)
+    bad = flipped(good)
+    assert decode_frames(good)[1:] == (1, "ok")
+
+    df = spark.createDataFrame([(1, good), (2, bad)],
+                               "doc_id long, payload binary")
+    out = {r["doc_id"]: r for r in zstd_text(df).collect()}
+    assert (out[1]["checksum_state"], out[1]["text"]) == (
+        "ok", page.decode())
+    assert (out[2]["n_frames"], out[2]["checksum_state"],
+            out[2]["text"]) == (-1, None, None)
+
+    head = "HTTP/1.1 200 OK\r\nContent-Encoding: zstd"
+    assert decode_http_body(head, good) == page
+    assert decode_http_body(head, bad) == bad
+
+    def warc(tag: str) -> bytes:
+        return write_warc_bytes(
+            [{"url": f"https://ex.com/{tag}{i}",
+              "warc_ts": "2026-08-18T00:00:00Z",
+              "payload": f"<p>{tag} {i}</p>".encode()} for i in range(3)],
+            gzip_members=False)
+
+    wdir = tmp_path / "warc"
+    wdir.mkdir()
+    (wdir / "good.warc.zst").write_bytes(_checksummed(spark, warc("good")))
+    (wdir / "bad.warc.zst").write_bytes(
+        flipped(_checksummed(spark, warc("bad"))))
+    rows = sorted((r.url, bytes(r.html)) for r in read_warc(
+        spark, str(wdir)).collect())
+    assert rows == [(f"https://ex.com/good{i}", f"<p>good {i}</p>".encode())
+                    for i in range(3)]
+
+    def shard(tag: str) -> bytes:
+        return "\n".join(json.dumps({
+            "url": f"https://ex.com/{tag}{i}",
+            "html_b64": base64.b64encode(f"<p>{i}</p>".encode()).decode(),
+            "text": f"{tag} {i}", "lang": "en"}) for i in range(4)).encode()
+
+    jdir = tmp_path / "jsonl"
+    jdir.mkdir()
+    (jdir / "good.jsonl.zst").write_bytes(_checksummed(spark, shard("good")))
+    (jdir / "bad.jsonl.zst").write_bytes(
+        flipped(_checksummed(spark, shard("bad"))))
+    rows = sorted((r.url, bytes(r.html), r.text) for r in
+                  read_pages_jsonl_compressed(spark, str(jdir)).collect())
+    assert rows == [(f"https://ex.com/good{i}", f"<p>{i}</p>".encode(),
+                     f"good {i}") for i in range(4)]
+
+
+def test_missing_codec_is_not_a_corrupt_stream(monkeypatch):
+    """A pyarrow built without zstd raises ArrowNotImplementedError;
+    it must propagate, not turn into ZstdError (which decode_http_body
+    would swallow, keeping compressed bytes as the page)."""
+    import pyarrow as pa
+
+    from goose_parser_spark.sources.warc import decode_http_body
+
+    def no_codec(*args, **kwargs):
+        raise pa.ArrowNotImplementedError("Support for codec 'zstd' not built")
+
+    monkeypatch.setattr(pa, "CompressedInputStream", no_codec)
+    with pytest.raises(pa.ArrowNotImplementedError):
+        decompress(HELLO_TAR_ZST)
+    with pytest.raises(pa.ArrowNotImplementedError):
+        decode_http_body("HTTP/1.1 200 OK\r\nContent-Encoding: zstd",
+                         HELLO_TAR_ZST)
