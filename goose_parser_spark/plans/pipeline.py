@@ -4,12 +4,12 @@ Implements the engine-infra operators the north rule requires on top
 of the reference's capabilities (SURVEY.md §2.8, BASELINE.json:14):
 
 I1  Url-hash bucketing — every row gets a deterministic
-    ``bucket = pmod(xxhash64(url), buckets)`` column, and
-    ``ExtractJob.run`` (``salt_shuffle=True``, the default)
-    repartitions on ``bucket`` into ``min(buckets, max(32, 2 ×
-    parallelism))`` partitions before extraction, so host-level skew
-    can't pile onto one task, each bucket lands wholly in one task,
-    and no ``rand()`` keeps resume stable across runs.
+    ``bucket = pmod(xxhash64(url), buckets)`` column; ``ExtractJob.run``
+    extracts on the scan splits, then repartitions the extracted rows
+    on ``bucket`` into ``min(buckets, max(32, 2 × parallelism))``
+    partitions, so each bucket lands wholly in one write task (one
+    file set per bucket) and no ``rand()`` keeps resume stable across
+    runs.
 I2  Per-partition lineage + metrics — one row per bucket with
     docs_in/ok/failed, bytes, parse time, engine version and the
     rules' sha256, written alongside the output.
@@ -21,9 +21,10 @@ I4  Failure isolation — lives in the extractor (error column); the
     metrics here count it.
 
 Scale design notes (100 TB / 10^12 docs):
-- The job is one wide stage: scan → exchange → Python runner → write.
-  No joins or aggregations touch the html blobs; the only shuffle
-  moves (url, html) once, hash-distributed by bucket.
+- The job is two stages: scan → Python runner → exchange → write.
+  No join, aggregation or exchange touches the html blobs: pages are
+  extracted where they are read, and the only shuffle moves the
+  extracted rows once, hash-distributed by bucket.
 - The resume anti-join's right side is the metrics table (≤ one row
   per bucket — thousands, not billions) and is explicitly
   ``broadcast()``: no shuffle of the 100 TB side for resume.
@@ -109,15 +110,16 @@ class ExtractJob:
 
     # -- resume state ----------------------------------------------------------
 
-    def committed_buckets(self) -> DataFrame | None:
-        """Buckets with a committed metrics row (None if first run)."""
+    def _committed_metrics(self) -> DataFrame | None:
+        """The committed metrics table (None if first run). Loaded once
+        per run: metrics are written last, so it cannot change before
+        this run appends its own rows."""
         try:
-            return (self.spark.read.format(self.fmt).load(self.metrics_dir)
-                    .select("bucket").distinct())
+            return self.spark.read.format(self.fmt).load(self.metrics_dir)
         except Exception:  # AnalysisException: path does not exist
             return None
 
-    def _validate_resume_config(self) -> None:
+    def _validate_resume_config(self, m: DataFrame) -> None:
         """Fail fast when this job's config disagrees with the one the
         committed metrics were written under (ADVICE r01, medium).
 
@@ -129,10 +131,6 @@ class ExtractJob:
         hold a different output schema/content than new ones. All three
         are corruption-with-no-error, so they are hard errors here.
         """
-        try:
-            m = self.spark.read.format(self.fmt).load(self.metrics_dir)
-        except Exception:
-            return
         if "buckets" not in m.columns:  # metrics written pre-upgrade
             return
         # ADVICE r02: a metrics dir can mix pre-upgrade rows (config
@@ -177,19 +175,16 @@ class ExtractJob:
 
     # -- the run -----------------------------------------------------------------
 
-    def run(self, pages: DataFrame, resume: bool = True,
-            salt_shuffle: bool = True) -> dict:
+    def run(self, pages: DataFrame, resume: bool = True) -> dict:
         """Execute (or resume) the extraction. Returns a small summary
         dict (driver-side scalars only — never row data).
 
-        ``salt_shuffle=True`` (default, I1) repartitions on the url-hash
-        bucket BEFORE extraction: crawl inputs are typically laid out
-        by host/WARC order, so scan splits are host-correlated — the
-        one shuffle decorrelates that skew AND lands each bucket wholly
-        in one task, so the partitioned write produces one file set per
-        bucket instead of tasks×buckets fragments. Disable only for
-        inputs already bucketed by url-hash (e.g. the Iceberg spec from
-        tools/iceberg_ddl.py), where the shuffle would be pure cost.
+        One plan: bucket column → broadcast anti-join of committed
+        buckets (I3) → ``extract`` on the scan splits → repartition the
+        extracted rows on ``bucket`` (I1) → partitioned write. The
+        exchange carries results, not pages, and lands each bucket
+        wholly in one task, so the write produces one file set per
+        bucket instead of tasks×buckets fragments.
         """
         run_id = uuid.uuid4().hex
         t0 = time.time()
@@ -198,30 +193,28 @@ class ExtractJob:
             pages.select(self.url_col, self.html_col), self.buckets, self.url_col
         )
 
+        metrics_in = self._committed_metrics()
+        committed = (None if metrics_in is None
+                     else metrics_in.select("bucket").distinct())
         skipped = 0
-        if resume:
-            self._validate_resume_config()
-            committed = self.committed_buckets()
-            if committed is not None:
-                skipped = committed.count()
-                # broadcast anti-join: metrics side is ≤ `buckets` rows;
-                # the 100 TB side never shuffles for resume (I3).
-                bucketed = bucketed.join(
-                    F.broadcast(committed), on="bucket", how="left_anti"
-                )
+        if resume and committed is not None:
+            self._validate_resume_config(metrics_in)
+            skipped = committed.count()
+            # broadcast anti-join: metrics side is ≤ `buckets` rows;
+            # the 100 TB side never shuffles for resume (I3).
+            bucketed = bucketed.join(
+                F.broadcast(committed), on="bucket", how="left_anti"
+            )
 
-        if salt_shuffle:
-            parallelism = self.spark.sparkContext.defaultParallelism
-            num_parts = min(self.buckets, max(32, parallelism * 2))
-            bucketed = bucketed.repartition(num_parts, F.col("bucket"))
-
+        parallelism = self.spark.sparkContext.defaultParallelism
+        num_parts = min(self.buckets, max(32, parallelism * 2))
         extracted = extract(
             bucketed,
             self.compiled,
             html_col=self.html_col,
             url_col=self.url_col,
             keep_cols=("bucket",),
-        )
+        ).repartition(num_parts, F.col("bucket"))
 
         # data write: partitioned by bucket, dynamic overwrite so a
         # re-run of an uncommitted bucket replaces its partial files
@@ -235,11 +228,10 @@ class ExtractJob:
         # re-read only the light columns (columnar scan skips html/
         # extracted entirely), aggregate per bucket, append.
         out = self.spark.read.format(self.fmt).load(self.data_dir)
-        committed_now = self.committed_buckets()
         todo_metrics = out.select("bucket", "error", "parse_ns", "bytes_in")
-        if committed_now is not None:
+        if committed is not None:
             todo_metrics = todo_metrics.join(
-                F.broadcast(committed_now), on="bucket", how="left_anti"
+                F.broadcast(committed), on="bucket", how="left_anti"
             )
         metrics = (todo_metrics
             .groupBy("bucket")

@@ -15,11 +15,11 @@ distribution model:
   html) rows matching the input-hint page schema; ``response``
   records carry the HTTP payload with headers stripped.
 
-At 100 TB: pair with ``ExtractJob`` — read_warc → repartition on the
-url-hash bucket → extract → partitioned write. The binaryFile row
-carries the whole file in memory once; CC files are ~1 GB compressed,
-so size executor memory accordingly or pre-split with
-maxRecordsPerFile on re-landing.
+At 100 TB: pair with ``ExtractJob`` — read_warc → extract →
+repartition the extracted rows on the url-hash bucket → partitioned
+write. The binaryFile row carries the whole file in memory once; CC
+files are ~1 GB compressed, so size executor memory accordingly or
+pre-split with maxRecordsPerFile on re-landing.
 """
 
 from __future__ import annotations
@@ -274,8 +274,8 @@ def read_warc(
     keep_http_headers: bool = False,
 ) -> "DataFrame":
     """Distributed WARC read: one task per ``.warc``/``.warc.gz``/
-    ``.warc.zst`` file (binaryFile source; zstd inflated by the
-    pure-stdlib RFC 8878 decoder), each file one document of
+    ``.warc.zst`` file (binaryFile source; zstd inflated by libzstd
+    through pyarrow's ``inflate_stream``), each file one document of
     ``kernel.map_docs`` whose rows are its records. Returns
     ``url, warc_ts (timestamp), record_type, content_type, html
     (binary)`` — the input-hint page shape, ready for ``extract``.

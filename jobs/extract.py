@@ -44,9 +44,6 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
                         "size ≥ 4 × executors × cores for scaling headroom")
     p.add_argument("--no-resume", action="store_true",
                    help="recompute everything, ignore committed buckets")
-    p.add_argument("--no-salt-shuffle", action="store_true",
-                   help="skip the pre-extraction url-hash repartition "
-                        "(only for inputs already bucketed by url-hash)")
     p.add_argument("--lang", default=None, help="filter pages.lang (pushed down)")
     p.add_argument("--since", default=None, help="min warc_ts (pushed down)")
     p.add_argument("--until", default=None, help="max warc_ts (pushed down)")
@@ -92,8 +89,7 @@ def main(argv: list[str] | None = None) -> int:
     job = ExtractJob(
         spark, rules, args.output, buckets=args.buckets, fmt=args.format
     )
-    summary = job.run(pages, resume=not args.no_resume,
-                      salt_shuffle=not args.no_salt_shuffle)
+    summary = job.run(pages, resume=not args.no_resume)
     print(json.dumps(summary))
     return 0
 

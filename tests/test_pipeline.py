@@ -115,8 +115,8 @@ def test_no_resume_recomputes_everything(spark, pages_df, tmp_path):
     assert data.count() == N  # dynamic overwrite → still exactly one copy
 
 
-def test_salt_shuffle_consolidates_bucket_files(spark, pages_df, tmp_path):
-    """With the I1 shuffle, each bucket's data lands in one task →
+def test_bucket_exchange_consolidates_bucket_files(spark, pages_df, tmp_path):
+    """With the I1 exchange, each bucket's data lands in one task →
     one file set per bucket (not tasks × buckets fragments)."""
     out = str(tmp_path / "out")
     job = ExtractJob(spark, RULES, out, buckets=8)
@@ -127,11 +127,42 @@ def test_salt_shuffle_consolidates_bucket_files(spark, pages_df, tmp_path):
         assert len(files) == 1, (b["bucket"], files)
 
 
-def test_salt_shuffle_off_still_correct(spark, pages_df, tmp_path):
-    out = str(tmp_path / "out")
-    job = ExtractJob(spark, RULES, out, buckets=8)
-    job.run(pages_df, resume=False, salt_shuffle=False)
-    assert spark.read.parquet(f"{out}/data").count() == N
+def _seq(obj) -> list:
+    return [obj.apply(i) for i in range(obj.size())]
+
+
+def test_exchange_carries_extracted_rows_not_pages(spark, pages_df, tmp_path):
+    """The data write's only bucket exchange sits ABOVE the extract
+    MapInArrow: pages are extracted on the scan splits and the shuffle
+    moves results, never the html."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    before = {ex.executionId() for ex in _seq(store.executionsList())}
+    ExtractJob(spark, RULES, str(tmp_path / "out"), buckets=8).run(
+        pages_df, resume=False)
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+
+    writes = []
+    for ex in _seq(store.executionsList()):
+        if ex.executionId() in before:
+            continue
+        graph = store.planGraph(ex.executionId())
+        nodes = {n.id(): n for n in _seq(graph.allNodes())}
+        if any(n.name() == "MapInArrow" for n in nodes.values()):
+            writes.append((graph, nodes))
+    assert len(writes) == 1  # the data write; the metrics write has none
+    graph, nodes = writes[0]
+    parent = {e.fromId(): e.toId() for e in _seq(graph.edges())}
+
+    def ancestors(node_id):
+        while node_id in parent:
+            node_id = parent[node_id]
+            yield node_id
+
+    (udf,) = [i for i, n in nodes.items() if n.name() == "MapInArrow"]
+    (exchange,) = [i for i, n in nodes.items() if n.name() == "Exchange"
+                   and "hashpartitioning(bucket#" in n.desc()]
+    assert exchange in set(ancestors(udf))
+    assert udf not in set(ancestors(exchange))
 
 
 def test_resume_rejects_changed_bucket_count(spark, pages_df, tmp_path):

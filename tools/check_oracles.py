@@ -108,11 +108,15 @@ def main() -> int:
                 f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
 
     qs = entrymod.queries()
+    if ONLY:
+        unknown = sorted(ONLY - qs.keys())
+        if unknown:
+            print(f"FAIL no such queries: {', '.join(unknown)}")
+            return 1
+        qs = {name: fn for name, fn in qs.items() if name in ONLY}
     oracles = entrymod.oracle_sql()
     failed = []
     for name, fn in qs.items():
-        if ONLY and name not in ONLY:
-            continue
         try:
             sdf = fn(spark, SF_DIR)
             scols = sdf.columns
