@@ -674,6 +674,18 @@ def index_keys(selector: "Selector | str") -> tuple[set[str], set[str],
     return tags, classes, ids
 
 
+class _AnyKey:
+    """The unrestricted universe: contains every tag, class and id."""
+
+    __slots__ = ()
+
+    def __contains__(self, key: str) -> bool:
+        return True
+
+
+_EVERY_KEY = (_AnyKey(),) * 3
+
+
 class DocIndex:
     """Per-document element index: one pre-order walk builds tag/class/
     id maps, then each selector fetches candidates for its RIGHTMOST
@@ -691,7 +703,8 @@ class DocIndex:
         """``elements`` may supply the document-order element list the
         parser already produced (parse_document), skipping the walk.
 
-        ``universe`` — optional ``(tags, classes, ids)`` restriction:
+        ``universe`` — optional ``(tags, classes, ids)`` restriction
+        (None indexes every key):
         only keys the caller's selectors can ever look up are indexed
         (compiled rule trees reference a handful of names; real pages
         carry hundreds of distinct classes, so unrestricted indexing
@@ -714,41 +727,27 @@ class DocIndex:
         self.by_class: dict[str, list[Element]] = {}
         self.by_id: dict[str, list[Element]] = {}
         by_tag, by_class, by_id = self.by_tag, self.by_class, self.by_id
-        if universe is not None:
-            w_tags, w_classes, w_ids = universe
-            for el in self.all:
-                tag = el.tag
-                if tag in w_tags:
-                    by_tag.setdefault(tag, []).append(el)
-                attrs = el.attrs
-                cval = attrs.get("class")
-                if cval is not None and cval:
-                    cl = el.classes()
-                    if len(cl) == 1:
-                        if cl[0] in w_classes:
-                            by_class.setdefault(cl[0], []).append(el)
-                    else:
-                        for cls in dict.fromkeys(cl):
-                            if cls in w_classes:
-                                by_class.setdefault(cls, []).append(el)
-                el_id = attrs.get("id")
-                if el_id is not None and el_id in w_ids:
-                    by_id.setdefault(el_id, []).append(el)
-            return
+        w_tags, w_classes, w_ids = (_EVERY_KEY if universe is None
+                                    else universe)
         for el in self.all:
-            by_tag.setdefault(el.tag, []).append(el)
+            tag = el.tag
+            if tag in w_tags:
+                by_tag.setdefault(tag, []).append(el)
             attrs = el.attrs
-            if "class" in attrs:
+            cval = attrs.get("class")
+            if cval is not None and cval:
                 cl = el.classes()
-                if len(cl) == 1:  # common case: skip the dedup pass
-                    by_class.setdefault(cl[0], []).append(el)
+                if len(cl) == 1:
+                    if cl[0] in w_classes:
+                        by_class.setdefault(cl[0], []).append(el)
                 else:
                     # dict.fromkeys: class="x x" must not double-insert
                     # (candidate lists are consumed without dedup)
                     for cls in dict.fromkeys(cl):
-                        by_class.setdefault(cls, []).append(el)
+                        if cls in w_classes:
+                            by_class.setdefault(cls, []).append(el)
             el_id = attrs.get("id")
-            if el_id is not None:
+            if el_id is not None and el_id in w_ids:
                 by_id.setdefault(el_id, []).append(el)
 
     def subtree_ends(self) -> dict[int, int]:

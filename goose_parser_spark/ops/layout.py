@@ -862,17 +862,11 @@ def parse_pdf_images(data: bytes) -> list[dict]:
     return out
 
 
-def parse_pdf_stub(data: bytes, fake: bool = True) -> list[str]:
-    """STUB PDF parser → list of page texts.
-
-    ``fake=True``: deterministic fake pagination — the byte payload is
-    decoded latin-1 and split into 512-byte "pages" (stable across
-    runs/engines). Otherwise raises: plug a real parser here.
+def parse_pdf_stub(data: bytes) -> list[str]:
+    """STUB PDF parser → list of page texts: deterministic fake
+    pagination — the byte payload is decoded latin-1 and split into
+    512-byte "pages" (stable across runs/engines).
     """
-    if not fake:
-        raise NotImplementedError(
-            "no PDF parser in this container; pass fake=True or swap "
-            "in pdfminer/pypdf")
     text = data.decode("latin-1")
     page_size = 512
     return [text[i:i + page_size] for i in range(0, max(len(text), 1), page_size)]

@@ -122,7 +122,6 @@ def main_content(html: str | bytes) -> tuple[str, float]:
     root = parse_html(html)
     cands = score_candidates(root)
     if not cands:
-        body = next(iter(root.iter_elements()), None)
         return (root.text(), 0.0)
     # max score; deepest wins ties so wrappers never beat the article
     best = max(cands, key=lambda t: (t[0], t[1]))

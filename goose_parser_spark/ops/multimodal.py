@@ -20,11 +20,10 @@ even for codec-bound formats. Lossy WebP decodes for real since the
 ops/vp8.py keyframe decoder landed. PIXEL/SAMPLE decode for formats
 that require codec libraries offline — AVIF pixels, perceptual
 audio (MP3/AAC/Vorbis), inter-frame video codecs (H.26x/VPx/AV1) —
-remains STUBBED: :func:`decode_stub`
-raises ``NotImplementedError`` unless ``fake=True``, which emits a
-deterministic fake feature vector so the Spark-side plumbing (schema,
-batch shape, partitioning, UDF signature) stays real and tested;
-swapping in a full decoder is a one-function change.
+remains STUBBED: :func:`decode_stub` emits a deterministic fake
+feature vector so the Spark-side plumbing (schema, batch shape,
+partitioning, UDF signature) stays real and tested; swapping in a full
+decoder is a one-function change.
 """
 
 from __future__ import annotations
@@ -64,14 +63,10 @@ def attach_payload(df: DataFrame, text_col: str = "text",
     )
 
 
-def decode_stub(data: bytes, fake: bool = True) -> list[float]:
-    """STUB decoder. With ``fake=True`` returns a deterministic 8-dim
-    feature vector from the byte content (so tests/benchmarks have
-    stable values); otherwise raises — plug a real codec here."""
-    if not fake:
-        raise NotImplementedError(
-            "no image/audio codecs in this container; pass fake=True "
-            "or swap in a real decoder")
+def decode_stub(data: bytes) -> list[float]:
+    """STUB decoder: a deterministic 8-dim feature vector from the byte
+    content (so tests/benchmarks have stable values) — plug a real
+    codec here."""
     digest = hashlib.sha1(data).digest()
     return [digest[i] / 255.0 for i in range(8)]
 
@@ -110,7 +105,6 @@ def extract_features(
     df: DataFrame,
     payload_col: str = "payload",
     id_col: str = "doc_id",
-    batch_feature_dim: int = 8,
 ) -> DataFrame:
     """Feature extraction over binary payloads on the per-document map
     kernel (kernel.map_docs): the only per-document Python is the

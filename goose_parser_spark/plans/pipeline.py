@@ -15,8 +15,9 @@ I2  Per-partition lineage + metrics — one row per bucket with
     rules' sha256, written alongside the output.
 I3  Checkpoint-based resume — a bucket is complete iff its metrics
     row is committed (metrics are written AFTER data, per bucket
-    set); restart anti-joins committed buckets so finished partitions
-    are NEVER recomputed. Idempotent via dynamic partition overwrite.
+    set); a run reads the committed buckets once and filters them out
+    of the pages and of its metrics pass, so finished partitions are
+    NEVER recomputed. Idempotent via dynamic partition overwrite.
 I4  Failure isolation — lives in the extractor (error column); the
     metrics here count it.
 
@@ -25,13 +26,16 @@ Scale design notes (100 TB / 10^12 docs):
   No join, aggregation or exchange touches the html blobs: pages are
   extracted where they are read, and the only shuffle moves the
   extracted rows once, hash-distributed by bucket.
-- The resume anti-join's right side is the metrics table (≤ one row
-  per bucket — thousands, not billions) and is explicitly
-  ``broadcast()``: no shuffle of the 100 TB side for resume.
+- Resume state is one ``collect()`` of the metrics table (≤ one row
+  per committed bucket — thousands, not billions) into a driver-side
+  set; skipping is a ``NOT bucket IN (...)`` literal filter, so no
+  join touches the 100 TB side and the metrics pass's re-read of the
+  ``bucket``-partitioned output prunes to the buckets this run wrote.
 - Metrics aggregate from the extractor's per-doc parse_ns/bytes_in
   columns AFTER re-reading the committed output (columnar, light
   columns only) — so a metrics row can never exist for data that
-  didn't commit, and nothing ever ``collect()``s through the driver.
+  didn't commit, and no per-document row ever ``collect()``s through
+  the driver.
 """
 
 from __future__ import annotations
@@ -41,6 +45,7 @@ import json
 import time
 import uuid
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from goose_parser_spark.extractor import extract
@@ -85,6 +90,8 @@ class ExtractJob:
     for a run commits, so ``bucket ∈ metrics ⇒ bucket data complete``.
     A restart filters input to buckets without metrics rows and
     re-writes only those (dynamic partition overwrite → idempotent).
+    Every run, resumed or not, first checks that committed metrics were
+    written under this job's buckets, url column and rules.
     """
 
     def __init__(
@@ -110,62 +117,74 @@ class ExtractJob:
 
     # -- resume state ----------------------------------------------------------
 
-    def _committed_metrics(self) -> DataFrame | None:
-        """The committed metrics table (None if first run). Loaded once
-        per run: metrics are written last, so it cannot change before
-        this run appends its own rows."""
+    def _committed_buckets(self) -> set[int]:
+        """The buckets with a committed metrics row, read once per run
+        after checking the config they were written under. One
+        ``collect()`` of distinct (bucket, config) rows: at most one per
+        committed bucket, so ≤ ``buckets`` rows. Metrics are written
+        last, so this snapshot cannot change before this run appends
+        its own rows."""
         try:
-            return self.spark.read.format(self.fmt).load(self.metrics_dir)
-        except Exception:  # AnalysisException: path does not exist
-            return None
+            m = self.spark.read.format(self.fmt).load(self.metrics_dir)
+        except AnalysisException as e:
+            # first run: no metrics dir, or one holding no committed
+            # file (a run killed in its metrics write leaves _temporary/)
+            if e.getCondition() in ("PATH_NOT_FOUND",
+                                    "UNABLE_TO_INFER_SCHEMA"):
+                return set()
+            raise
+        if "buckets" not in m.columns:  # metrics written pre-upgrade
+            return {r["bucket"]
+                    for r in m.select("bucket").distinct().collect()}
+        rows = m.select("bucket", "buckets", "url_col",
+                        "rules_sha256").distinct().collect()
+        self._validate_resume_config(rows)
+        return {r["bucket"] for r in rows}
 
-    def _validate_resume_config(self, m: DataFrame) -> None:
+    def _validate_resume_config(self, rows: list) -> None:
         """Fail fast when this job's config disagrees with the one the
         committed metrics were written under (ADVICE r01, medium).
 
         Bucket membership is ``pmod(xxhash64(url), buckets)``: resuming
         with a different ``buckets`` (or a different url column) reuses
-        committed bucket ids whose MEMBERSHIP changed — the anti-join
-        would silently skip never-extracted documents and re-extract
-        others. Same for a changed rule tree: committed buckets would
-        hold a different output schema/content than new ones. All three
-        are corruption-with-no-error, so they are hard errors here.
+        committed bucket ids whose MEMBERSHIP changed — the resume
+        filter would silently skip never-extracted documents and
+        re-extract others. Same for a changed rule tree: committed
+        buckets would hold a different output schema/content than new
+        ones. All three are corruption-with-no-error, so they are hard
+        errors here — also under ``resume=False``, which rewrites data
+        but keeps the committed metrics rows (and their lineage).
         """
-        if "buckets" not in m.columns:  # metrics written pre-upgrade
-            return
         # ADVICE r02: a metrics dir can mix pre-upgrade rows (config
-        # columns NULL under schema evolution) with new rows — .head()
-        # made validation depend on which row Spark sampled. Check ALL
-        # distinct non-null config tuples instead: deterministic, and a
-        # dir written under two different configs is itself an error.
-        rows = (m.select("buckets", "url_col", "rules_sha256")
-                .where(F.col("buckets").isNotNull()
-                       & F.col("url_col").isNotNull()
-                       & F.col("rules_sha256").isNotNull())
-                .distinct().collect())  # ≤ #configs rows, never per-doc
-        if not rows:
+        # columns NULL under schema evolution) with new rows. Check ALL
+        # distinct non-null config tuples: deterministic, and a dir
+        # written under two different configs is itself an error.
+        configs = {(r["buckets"], r["url_col"], r["rules_sha256"])
+                   for r in rows}
+        configs = [c for c in configs if None not in c]
+        if not configs:
             return
-        if len(rows) > 1:
+        if len(configs) > 1:
             raise ValueError(
                 f"resume config mismatch: metrics at {self.metrics_dir} "
-                f"carry {len(rows)} distinct (buckets, url_col, "
+                f"carry {len(configs)} distinct (buckets, url_col, "
                 "rules_sha256) configs — the output dir mixes runs with "
                 "incompatible bucket membership. Use a fresh output_dir.")
-        row = rows[0]
-        if row["buckets"] != self.buckets:
+        (buckets, url_col, sha), = configs
+        if buckets != self.buckets:
             raise ValueError(
                 f"resume config mismatch: output at {self.metrics_dir} was "
-                f"written with buckets={row['buckets']}, this job has "
+                f"written with buckets={buckets}, this job has "
                 f"buckets={self.buckets}; bucket membership differs — "
                 "resume would skip/redo the wrong documents. Use the "
                 "original bucket count or a fresh output_dir.")
-        if row["url_col"] != self.url_col:
+        if url_col != self.url_col:
             raise ValueError(
-                f"resume config mismatch: url_col was {row['url_col']!r}, "
+                f"resume config mismatch: url_col was {url_col!r}, "
                 f"this job uses {self.url_col!r}; bucket membership "
                 "differs. Use the original url column or a fresh "
                 "output_dir.")
-        if row["rules_sha256"] != rules_sha256(self.rules_spec):
+        if sha != rules_sha256(self.rules_spec):
             raise ValueError(
                 "resume config mismatch: the rule tree changed since the "
                 "committed run (rules_sha256 differs); committed buckets "
@@ -179,12 +198,13 @@ class ExtractJob:
         """Execute (or resume) the extraction. Returns a small summary
         dict (driver-side scalars only — never row data).
 
-        One plan: bucket column → broadcast anti-join of committed
-        buckets (I3) → ``extract`` on the scan splits → repartition the
-        extracted rows on ``bucket`` (I1) → partitioned write. The
-        exchange carries results, not pages, and lands each bucket
-        wholly in one task, so the write produces one file set per
-        bucket instead of tasks×buckets fragments.
+        One plan: bucket column → filter out the committed buckets
+        (I3, under ``resume``) → ``extract`` on the scan splits →
+        repartition the extracted rows on ``bucket`` (I1) → partitioned
+        write. The exchange carries results, not pages, and lands each
+        bucket wholly in one task, so the write produces one file set
+        per bucket instead of tasks×buckets fragments. The metrics pass
+        then aggregates only the buckets not committed before this run.
         """
         run_id = uuid.uuid4().hex
         t0 = time.time()
@@ -193,18 +213,12 @@ class ExtractJob:
             pages.select(self.url_col, self.html_col), self.buckets, self.url_col
         )
 
-        metrics_in = self._committed_metrics()
-        committed = (None if metrics_in is None
-                     else metrics_in.select("bucket").distinct())
-        skipped = 0
-        if resume and committed is not None:
-            self._validate_resume_config(metrics_in)
-            skipped = committed.count()
-            # broadcast anti-join: metrics side is ≤ `buckets` rows;
-            # the 100 TB side never shuffles for resume (I3).
-            bucketed = bucketed.join(
-                F.broadcast(committed), on="bucket", how="left_anti"
-            )
+        done = self._committed_buckets()
+        # ≤ `buckets` literals: no join, and a partition filter on the
+        # bucket-partitioned output (I3)
+        todo = ~F.col("bucket").isin(sorted(done))
+        if resume and done:
+            bucketed = bucketed.where(todo)
 
         parallelism = self.spark.sparkContext.defaultParallelism
         num_parts = min(self.buckets, max(32, parallelism * 2))
@@ -226,13 +240,12 @@ class ExtractJob:
 
         # metrics AFTER data, derived from the committed output files —
         # re-read only the light columns (columnar scan skips html/
-        # extracted entirely), aggregate per bucket, append.
+        # extracted entirely) of the buckets without a metrics row,
+        # aggregate per bucket, append.
         out = self.spark.read.format(self.fmt).load(self.data_dir)
         todo_metrics = out.select("bucket", "error", "parse_ns", "bytes_in")
-        if committed is not None:
-            todo_metrics = todo_metrics.join(
-                F.broadcast(committed), on="bucket", how="left_anti"
-            )
+        if done:
+            todo_metrics = todo_metrics.where(todo)
         metrics = (todo_metrics
             .groupBy("bucket")
             .agg(
@@ -255,7 +268,7 @@ class ExtractJob:
         return {
             "run_id": run_id,
             "buckets_total": self.buckets,
-            "buckets_skipped_by_resume": skipped,
+            "buckets_skipped_by_resume": len(done) if resume else 0,
             "wall_seconds": time.time() - t0,
         }
 

@@ -27,6 +27,21 @@ from goose_parser_spark.rules.compiler import CompiledRules, RuleCompiler
 from goose_parser_spark.sources.fixtures import pages_schema
 
 
+def _start_parquet_sink(df, output_dir: str, checkpoint_dir: str,
+                        available_now: bool):
+    """Start an append-mode parquet sink at ``output_dir``; the sink
+    commit log under ``checkpoint_dir`` makes delivery exactly-once.
+    ``available_now`` drains the input present at start, then stops."""
+    writer = (df.writeStream
+              .format("parquet")
+              .option("path", output_dir)
+              .option("checkpointLocation", checkpoint_dir)
+              .outputMode("append"))
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
 def stream_extract(
     spark: SparkSession,
     input_dir: str,
@@ -54,14 +69,8 @@ def stream_extract(
 
     extracted = extract(pages, rules)
 
-    writer = (extracted.writeStream
-              .format("parquet")
-              .option("path", output_dir)
-              .option("checkpointLocation", checkpoint_dir)
-              .outputMode("append"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_parquet_sink(extracted, output_dir, checkpoint_dir,
+                               available_now)
 
 
 def stream_dedup_exact(
@@ -121,14 +130,8 @@ def stream_dedup_exact(
     dedup = (keyed.groupBy("content_h")
              .applyInPandasWithState(dedup_fn, out_schema, state_schema,
                                      "append", GroupStateTimeout.NoTimeout))
-    writer = (dedup.writeStream
-              .format("parquet")
-              .option("path", output_dir)
-              .option("checkpointLocation", checkpoint_dir)
-              .outputMode("append"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_parquet_sink(dedup, output_dir, checkpoint_dir,
+                               available_now)
 
 
 def stream_windowed_counts(
@@ -165,14 +168,8 @@ def stream_windowed_counts(
            .select(F.col("window.start").alias("window_start"),
                    F.col("window.end").alias("window_end"),
                    F.col(key_col), F.col("n")))
-    writer = (agg.writeStream
-              .format("parquet")
-              .option("path", output_dir)
-              .option("checkpointLocation", checkpoint_dir)
-              .outputMode("append"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_parquet_sink(agg, output_dir, checkpoint_dir,
+                               available_now)
 
 
 def stream_sessionize(
@@ -272,14 +269,8 @@ def stream_sessionize(
                 .applyInPandasWithState(fn, out_schema, state_schema,
                                         "append",
                                         GroupStateTimeout.EventTimeTimeout))
-    writer = (sessions.writeStream
-              .format("parquet")
-              .option("path", output_dir)
-              .option("checkpointLocation", checkpoint_dir)
-              .outputMode("append"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_parquet_sink(sessions, output_dir, checkpoint_dir,
+                               available_now)
 
 
 def stream_dedup_near(
@@ -462,11 +453,5 @@ def stream_distinct_hll(
            .select(F.col("window.start").alias("window_start"),
                    F.col("window.end").alias("window_end"),
                    F.col("bucket"), F.col("rho")))
-    writer = (agg.writeStream
-              .format("parquet")
-              .option("path", output_dir)
-              .option("checkpointLocation", checkpoint_dir)
-              .outputMode("append"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_parquet_sink(agg, output_dir, checkpoint_dir,
+                               available_now)

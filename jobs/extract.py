@@ -43,7 +43,9 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
                    help="url-hash bucket count (resume granularity); "
                         "size ≥ 4 × executors × cores for scaling headroom")
     p.add_argument("--no-resume", action="store_true",
-                   help="recompute everything, ignore committed buckets")
+                   help="recompute every bucket; the output's committed "
+                        "metrics must still match --buckets and the rules "
+                        "(use a fresh --output to change them)")
     p.add_argument("--lang", default=None, help="filter pages.lang (pushed down)")
     p.add_argument("--since", default=None, help="min warc_ts (pushed down)")
     p.add_argument("--until", default=None, help="max warc_ts (pushed down)")

@@ -65,8 +65,6 @@ def test_extract_main_content_dataframe(spark):
 
 
 def test_pdf_stub_contract():
-    with pytest.raises(NotImplementedError):
-        parse_pdf_stub(b"%PDF-1.4", fake=False)
     pages = parse_pdf_stub(b"x" * 1100)
     assert [len(p) for p in pages] == [512, 512, 76]
     assert parse_pdf_stub(b"") == [""]

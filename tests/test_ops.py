@@ -171,8 +171,6 @@ def test_extract_features_null_and_undecodable_payloads(spark):
 
 
 def test_decode_stub_contract():
-    with pytest.raises(NotImplementedError):
-        decode_stub(b"img", fake=False)
     assert decode_stub(b"img") == decode_stub(b"img")
     assert len(decode_stub(b"img")) == 8
 

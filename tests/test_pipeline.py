@@ -131,24 +131,34 @@ def _seq(obj) -> list:
     return [obj.apply(i) for i in range(obj.size())]
 
 
+def _run_executions(spark, run) -> list:
+    """Call ``run()``; return the SQL executions it started, in order,
+    as ``(graph, {node id: node}, {accumulator id: value})`` read from
+    Spark's status store."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    before = {ex.executionId() for ex in _seq(store.executionsList())}
+    run()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    out = []
+    for ex in sorted(_seq(store.executionsList()),
+                     key=lambda ex: ex.executionId()):
+        if ex.executionId() in before:
+            continue
+        graph = store.planGraph(ex.executionId())
+        out.append((graph, {n.id(): n for n in _seq(graph.allNodes())},
+                    store.executionMetrics(ex.executionId())))
+    return out
+
+
 def test_exchange_carries_extracted_rows_not_pages(spark, pages_df, tmp_path):
     """The data write's only bucket exchange sits ABOVE the extract
     MapInArrow: pages are extracted on the scan splits and the shuffle
     moves results, never the html."""
-    store = spark._jsparkSession.sharedState().statusStore()
-    before = {ex.executionId() for ex in _seq(store.executionsList())}
-    ExtractJob(spark, RULES, str(tmp_path / "out"), buckets=8).run(
-        pages_df, resume=False)
-    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-
-    writes = []
-    for ex in _seq(store.executionsList()):
-        if ex.executionId() in before:
-            continue
-        graph = store.planGraph(ex.executionId())
-        nodes = {n.id(): n for n in _seq(graph.allNodes())}
-        if any(n.name() == "MapInArrow" for n in nodes.values()):
-            writes.append((graph, nodes))
+    executions = _run_executions(spark, lambda: ExtractJob(
+        spark, RULES, str(tmp_path / "out"), buckets=8).run(
+            pages_df, resume=False))
+    writes = [(graph, nodes) for graph, nodes, _ in executions
+              if any(n.name() == "MapInArrow" for n in nodes.values())]
     assert len(writes) == 1  # the data write; the metrics write has none
     graph, nodes = writes[0]
     parent = {e.fromId(): e.toId() for e in _seq(graph.edges())}
@@ -165,9 +175,66 @@ def test_exchange_carries_extracted_rows_not_pages(spark, pages_df, tmp_path):
     assert udf not in set(ancestors(exchange))
 
 
+def test_restart_reads_committed_metrics_once_and_prunes_them(
+        spark, pages_df, tmp_path):
+    """A half-committed restart reads its resume state in one query,
+    joins nothing, and its metrics pass scans only the data files of
+    the buckets it wrote: the committed buckets are a partition filter
+    on the bucket-partitioned output."""
+    out = str(tmp_path / "out")
+    first = with_bucket(pages_df, 16).filter(F.col("bucket") < 8)
+    ExtractJob(spark, RULES, out, buckets=16).run(first.drop("bucket"))
+    summary = {}
+    executions = _run_executions(spark, lambda: summary.update(
+        ExtractJob(spark, RULES, out, buckets=16).run(pages_df)))
+    assert summary["buckets_skipped_by_resume"] == 8
+
+    # resume-state read, data write, metrics write
+    assert len(executions) == 3
+    for _, nodes, _ in executions:
+        assert not any("BroadcastHashJoin" in n.name()
+                       for n in nodes.values())
+    _, nodes, values = executions[-1]  # the metrics write
+    (files_read,) = [int(values.get(m.accumulatorId()).get().replace(",", ""))
+                     for n in nodes.values() for m in _seq(n.metrics())
+                     if m.name() == "number of files read"]
+    written = [f for b in range(8, 16)
+               for f in glob.glob(f"{out}/data/bucket={b}/*.parquet")]
+    assert written and files_read == len(written)
+
+
+def test_unreadable_metrics_fail_the_run(spark, pages_df, tmp_path):
+    """Only a metrics dir with no committed file means a first run (a
+    run killed in its metrics write leaves just ``_temporary/``); one
+    that cannot be read must fail the run, not recompute every bucket
+    and append a second metrics row for each."""
+    out = tmp_path / "out"
+    (out / "metrics" / "_temporary" / "0").mkdir(parents=True)
+    summary = ExtractJob(spark, RULES, str(out), buckets=4).run(pages_df)
+    assert summary["buckets_skipped_by_resume"] == 0
+
+    bad = tmp_path / "bad"
+    (bad / "metrics").mkdir(parents=True)
+    (bad / "metrics" / "part-0.parquet").write_bytes(b"not parquet")
+    with pytest.raises(Exception, match="part-0.parquet"):
+        ExtractJob(spark, RULES, str(bad), buckets=4).run(pages_df)
+
+
+def test_no_resume_still_rejects_changed_rules(spark, pages_df, tmp_path):
+    """``resume=False`` rewrites every bucket's data but keeps the
+    committed metrics rows; with a changed rule tree those rows would
+    carry the old rules_sha256 over the new output, and a later resume
+    under the old rules would serve the new output as theirs."""
+    out = str(tmp_path / "out")
+    ExtractJob(spark, RULES, out, buckets=4).run(pages_df)
+    job_b = ExtractJob(spark, {"name": "t", "scope": "title"}, out, buckets=4)
+    with pytest.raises(ValueError, match="rules_sha256"):
+        job_b.run(pages_df, resume=False)
+
+
 def test_resume_rejects_changed_bucket_count(spark, pages_df, tmp_path):
     """ADVICE r01 (medium): restarting with a different `buckets` value
-    changes bucket MEMBERSHIP — the resume anti-join would silently
+    changes bucket MEMBERSHIP — the resume filter would silently
     skip never-extracted documents. Must fail fast instead."""
     import pytest
     out = str(tmp_path / "out")
