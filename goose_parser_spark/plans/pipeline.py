@@ -17,7 +17,9 @@ I3  Checkpoint-based resume — a bucket is complete iff its metrics
     row is committed (metrics are written AFTER data, per bucket
     set); a run reads the committed buckets once and filters them out
     of the pages and of its metrics pass, so finished partitions are
-    NEVER recomputed. Idempotent via dynamic partition overwrite.
+    NEVER recomputed; when every bucket is committed the run stops
+    there. Idempotent via dynamic partition overwrite; ``resume=False``
+    replaces the metrics rows of the committed buckets it rewrote.
 I4  Failure isolation — lives in the extractor (error column); the
     metrics here count it.
 
@@ -46,7 +48,7 @@ import time
 import uuid
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from goose_parser_spark.extractor import extract
 from goose_parser_spark.rules.compiler import CompiledRules, RuleCompiler
@@ -152,8 +154,9 @@ class ExtractJob:
         re-extract others. Same for a changed rule tree: committed
         buckets would hold a different output schema/content than new
         ones. All three are corruption-with-no-error, so they are hard
-        errors here — also under ``resume=False``, which rewrites data
-        but keeps the committed metrics rows (and their lineage).
+        errors here — also under ``resume=False``, which rewrites the
+        buckets in its input but keeps the other buckets' committed
+        metrics rows (and their lineage).
         """
         # ADVICE r02: a metrics dir can mix pre-upgrade rows (config
         # columns NULL under schema evolution) with new rows. Check ALL
@@ -204,16 +207,27 @@ class ExtractJob:
         write. The exchange carries results, not pages, and lands each
         bucket wholly in one task, so the write produces one file set
         per bucket instead of tasks×buckets fragments. The metrics pass
-        then aggregates only the buckets not committed before this run.
+        then aggregates only the buckets not committed before this run,
+        and under ``resume=False`` also the committed buckets it
+        rewrote, whose metrics rows it replaces. A restart that finds
+        every bucket committed runs nothing after reading its resume
+        state.
         """
         run_id = uuid.uuid4().hex
         t0 = time.time()
 
+        done = self._committed_buckets()
+        summary = {
+            "run_id": run_id,
+            "buckets_total": self.buckets,
+            "buckets_skipped_by_resume": len(done) if resume else 0,
+        }
+        if resume and done.issuperset(range(self.buckets)):
+            return {**summary, "wall_seconds": time.time() - t0}
+
         bucketed = with_bucket(
             pages.select(self.url_col, self.html_col), self.buckets, self.url_col
         )
-
-        done = self._committed_buckets()
         # ≤ `buckets` literals: no join, and a partition filter on the
         # bucket-partitioned output (I3)
         todo = ~F.col("bucket").isin(sorted(done))
@@ -229,6 +243,13 @@ class ExtractJob:
             url_col=self.url_col,
             keep_cols=("bucket",),
         ).repartition(num_parts, F.col("bucket"))
+        # a run that rewrites committed buckets learns which ones from
+        # its own write (≤ `buckets` ints, no extra scan)
+        rewrites = not resume and bool(done)
+        if rewrites:
+            written = Observation("written")
+            extracted = extracted.observe(
+                written, F.collect_set("bucket").alias("buckets"))
 
         # data write: partitioned by bucket, dynamic overwrite so a
         # re-run of an uncommitted bucket replaces its partial files
@@ -240,10 +261,13 @@ class ExtractJob:
 
         # metrics AFTER data, derived from the committed output files —
         # re-read only the light columns (columnar scan skips html/
-        # extracted entirely) of the buckets without a metrics row,
-        # aggregate per bucket, append.
+        # extracted entirely) of the buckets without a metrics row (and
+        # of the rewritten ones), aggregate per bucket, append.
         out = self.spark.read.format(self.fmt).load(self.data_dir)
         todo_metrics = out.select("bucket", "error", "parse_ns", "bytes_in")
+        if rewrites:
+            rewritten = sorted(written.get["buckets"])
+            todo = todo | F.col("bucket").isin(rewritten)
         if done:
             todo_metrics = todo_metrics.where(todo)
         metrics = (todo_metrics
@@ -263,14 +287,21 @@ class ExtractJob:
             .withColumn("buckets", F.lit(self.buckets))
             .withColumn("url_col", F.lit(self.url_col))
             .withColumn("completed_at", F.current_timestamp()))
-        metrics.write.format(self.fmt).mode("append").save(self.metrics_dir)
+        mode = "append"
+        if rewrites:
+            # replace the rewritten buckets' rows: the other committed
+            # rows (≤ `buckets`) go through the driver, so the overwrite
+            # never reads the directory it deletes. A crash mid-overwrite
+            # leaves no metrics, and the next run recomputes every bucket.
+            committed = self.spark.read.format(self.fmt).load(self.metrics_dir)
+            kept = committed.where(~F.col("bucket").isin(rewritten))
+            metrics = metrics.unionByName(
+                self.spark.createDataFrame(kept.collect(), kept.schema),
+                allowMissingColumns=True)
+            mode = "overwrite"
+        metrics.write.format(self.fmt).mode(mode).save(self.metrics_dir)
 
-        return {
-            "run_id": run_id,
-            "buckets_total": self.buckets,
-            "buckets_skipped_by_resume": len(done) if resume else 0,
-            "wall_seconds": time.time() - t0,
-        }
+        return {**summary, "wall_seconds": time.time() - t0}
 
 
 def _engine_version() -> str:

@@ -102,7 +102,7 @@ def read_pages_jsonl_compressed(
     inflates Hadoop-registered codecs (gzip), so like WARC the FILE
     is the unit of parallelism (none of these streams byte-split
     safely under a generic reader): inflate is budget-bounded per
-    shard inside one map-only mapInPandas, and lines parse with
+    shard inside one map-only mapInArrow, and lines parse with
     ``from_json`` under the EXPLICIT wire schema — same no-inference
     contract as :func:`read_pages_jsonl`. A shard that fails to
     inflate — malformed, cut mid-member, over budget or of an
@@ -114,31 +114,33 @@ def read_pages_jsonl_compressed(
     tell a ``.br`` shard from raw bytes."""
     import os
 
-    import pandas as pd
-
     from goose_parser_spark.deploy import ship_package
+    from goose_parser_spark.kernel import _arrow
     ship_package(spark)
     sch = schema or JSONL_PAGES_SCHEMA
 
     def run(batches):
-        for pdf in batches:
+        import pyarrow as pa
+
+        for batch in batches:
             lines: list[str] = []
-            for pth, content in zip(pdf["path"], pdf["content"]):
+            for pth, content in zip(batch.column(0).to_pylist(),
+                                    batch.column(1).to_pylist()):
                 if content is None:
                     continue
-                data = _inflate_shard(os.path.basename(str(pth)),
-                                      bytes(content))
+                data = _inflate_shard(os.path.basename(pth), content)
                 if data is None:
                     continue
                 lines.extend(
                     data.decode("utf-8", "replace").splitlines())
-            yield pd.DataFrame({"value": lines})
+            yield pa.RecordBatch.from_arrays([_arrow(lines, pa.string())],
+                                             names=["value"])
 
     raw = (spark.read.format("binaryFile")
            .option("pathGlobFilter", "*.jsonl*")
            .load(path)
            .select("path", "content"))
-    text = raw.mapInPandas(run, schema="value string")
+    text = raw.mapInArrow(run, schema="value string")
     df = (text.select(F.from_json("value", sch).alias("j"))
           .select("j.*"))
     if "html_b64" in df.columns:

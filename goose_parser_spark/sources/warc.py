@@ -420,6 +420,7 @@ def write_warc(
         LongType, StringType, StructField, StructType,
     )
     from goose_parser_spark.deploy import ship_package
+    from goose_parser_spark.kernel import _arrow
     ship_package(df.sparkSession)
 
     os.makedirs(path, exist_ok=True)
@@ -466,9 +467,9 @@ def write_warc(
                 fh.close()
         if n:
             yield pa.RecordBatch.from_arrays(
-                [pa.array([fname], pa.string()),
-                 pa.array([n], pa.int64()),
-                 pa.array([os.path.getsize(fname)], pa.int64())],
+                [_arrow([fname], pa.string()),
+                 _arrow([n], pa.int64()),
+                 _arrow([os.path.getsize(fname)], pa.int64())],
                 schema=arrow_schema)
 
     manifest = src.mapInArrow(write_parts, schema=manifest_schema)

@@ -262,3 +262,53 @@ def test_resume_rejects_changed_url_col_and_rules(spark, pages_df, tmp_path):
     summary = ExtractJob(spark, RULES, out, buckets=8).run(pages_df,
                                                            resume=True)
     assert summary["buckets_skipped_by_resume"] > 0
+
+
+def test_fully_committed_restart_runs_only_the_resume_read(
+        spark, pages_df, tmp_path):
+    """A restart that finds every bucket committed returns after its
+    one read of ``metrics/``: no scan of the pages, no write and no
+    metrics pass."""
+    out = str(tmp_path / "out")
+    ExtractJob(spark, RULES, out, buckets=4).run(pages_df)
+    metrics_before = sorted(map(tuple, spark.read.parquet(
+        f"{out}/metrics").collect()))
+    summary = {}
+    executions = _run_executions(spark, lambda: summary.update(
+        ExtractJob(spark, RULES, out, buckets=4).run(pages_df)))
+    assert len(executions) == 1
+    assert summary["buckets_skipped_by_resume"] == summary["buckets_total"] == 4
+    assert sorted(map(tuple, spark.read.parquet(
+        f"{out}/metrics").collect())) == metrics_before
+
+
+def test_no_resume_replaces_metrics_of_rewritten_buckets(
+        spark, pages_df, tmp_path):
+    """``resume=False`` over a different input rewrites the committed
+    buckets' data and their metrics rows: one row per bucket, counting
+    the second input. A bucket the second input does not reach keeps
+    its data and its first-run row."""
+    out = str(tmp_path / "out")
+    bucketed = with_bucket(pages_df, 4)
+    ExtractJob(spark, RULES, out, buckets=4).run(pages_df)
+    run1 = {r["bucket"]: r for r in spark.read.parquet(f"{out}/metrics")
+            .collect()}
+    assert sorted(run1) == [0, 1, 2, 3]
+    second = bucketed.where((F.col("bucket") != 3)
+                            & (F.crc32("url") % 2 == 0)).drop("bucket")
+    ExtractJob(spark, RULES, out, buckets=4).run(second, resume=False)
+
+    rows = spark.read.parquet(f"{out}/metrics").collect()
+    assert sorted(r["bucket"] for r in rows) == [0, 1, 2, 3]
+    want = {r["bucket"]: r["n"] for r in with_bucket(second, 4)
+            .groupBy("bucket").agg(F.count("*").alias("n")).collect()}
+    data = {r["bucket"]: r["n"] for r in spark.read.parquet(f"{out}/data")
+            .groupBy("bucket").agg(F.count("*").alias("n")).collect()}
+    for r in rows:
+        if r["bucket"] == 3:
+            assert r["run_id"] == run1[3]["run_id"]
+            assert r["docs_in"] == run1[3]["docs_in"] == data[3]
+        else:
+            assert r["docs_in"] == r["docs_ok"] == want[r["bucket"]]
+            assert r["docs_in"] == data[r["bucket"]] < run1[r["bucket"]]["docs_in"]
+            assert r["run_id"] != run1[r["bucket"]]["run_id"]
