@@ -31,5 +31,6 @@ __all__ = [
 
 # executor closures import the package while their first task unpickles,
 # so a reused Python worker stops re-reading Spark's zip archives before
-# every task (deploy.cache_zip_directories)
+# every task (deploy.cache_zip_directories). Called last: the importers
+# the package's own imports create are then shared from the first task.
 cache_zip_directories()

@@ -8,7 +8,8 @@ for programmatic use :func:`ship_package` builds the zip on the fly
 and registers it via ``sc.addPyFile`` — the same mechanism, no
 install step needed on workers. :func:`cache_zip_directories` keeps
 those workers from re-reading every zip on their path before each
-task.
+task: from the first task on, each archive's directory is read once
+and shared by all of its importers.
 """
 
 from __future__ import annotations
@@ -101,9 +102,14 @@ def cache_zip_directories() -> None:
       unchanged.
 
     Idempotent; does nothing on CPython >= 3.12. The package calls it
-    on import, which executors do while their first task unpickles: a
-    reused worker's second task re-reads each archive once, and later
-    tasks re-read none while the archives are unchanged.
+    on import, which executors do while their first task unpickles.
+    By then that task's ``invalidate_caches()`` has given each importer
+    its own copy of its archive's directory, so installing runs the
+    stat-keyed method once over every ``zipimporter`` in
+    ``sys.path_importer_cache``: each archive is re-read once, at
+    install, in the first task, its importers share that one dict, and
+    the copies are freed. Later tasks re-read nothing while the archives
+    are unchanged.
     """
     if sys.version_info >= (3, 12):
         return
@@ -136,3 +142,6 @@ def cache_zip_directories() -> None:
 
     invalidate_caches._stat_keyed = True
     zipimport.zipimporter.invalidate_caches = invalidate_caches
+    for finder in list(sys.path_importer_cache.values()):
+        if isinstance(finder, zipimport.zipimporter):
+            finder.invalidate_caches()

@@ -20,6 +20,8 @@ Design notes
 
 from __future__ import annotations
 
+import gc
+from contextlib import contextmanager
 from html.parser import HTMLParser
 
 
@@ -444,3 +446,34 @@ def parse_document(html: str | bytes, backend: str = "fast"):
     builder.close()
     changed = _ensure_document_structure(builder.root)
     return builder.root, (None if changed else builder.created)
+
+
+@contextmanager
+def page_scope():
+    """Free one page's DOM when its work ends, in one young collection.
+
+    A tree is a reference cycle (``Element.parent`` / ``children``), so
+    refcounting never frees it and, left to itself, the cyclic
+    collector runs several times mid-parse and frees the tree pages
+    later. Inside the scope the collector is off; at its end it is
+    back on and ``gc.collect(0)`` frees what the page left behind,
+    which is all still in the youngest generation. A collector that
+    was off at entry (a caller that times without it, or an enclosing
+    scope) stays off and nothing is collected.
+
+    The scope is per page, not per kernel call: ``epub_chapters``
+    parses one tree per chapter, and one scope around the document
+    would hold every chapter's tree until the last. Apply it as a
+    decorator (``@page_scope()``) to the function that parses, uses
+    and drops the tree: the function's frame, and with it the last
+    reference to the tree, is gone before the collection runs.
+    """
+    if not gc.isenabled():
+        yield
+        return
+    gc.disable()
+    try:
+        yield
+    finally:
+        gc.enable()
+        gc.collect(0)

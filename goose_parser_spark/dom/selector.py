@@ -694,7 +694,7 @@ class DocIndex:
     showed ``_gather`` re-walking the tree per step as the top cost)."""
 
     __slots__ = ("root", "all", "by_tag", "by_class", "by_id", "_ends",
-                 "pos_maps", "has_store", "eval_ctx")
+                 "_tag_class", "pos_maps", "has_store", "eval_ctx")
 
     def __init__(self, root: Element,
                  elements: list[Element] | None = None,
@@ -717,6 +717,9 @@ class DocIndex:
         self.all = elements if elements is not None \
             else list(root.iter_elements())
         self._ends: dict[int, int] | None = None
+        # (tag, class) -> the doc-ordered ``tag.class`` pool, built on
+        # first use (candidates_simple)
+        self._tag_class: dict[tuple[str, str], list[Element]] = {}
         # doc-scoped evaluation caches (see _EvalCtx): per-parent
         # position maps and per-:has-argument marked-ancestor sets
         # survive across select_indexed calls on the same document
@@ -796,18 +799,28 @@ class DocIndex:
         index pools are doc-ordered and duplicate-free, so for
         ``.cls`` / ``tag`` / ``*`` the pool IS the answer and
         ``tag.cls`` needs only a tag check — no per-element
-        _matches_compound, no chain walk."""
+        _matches_compound, no chain walk. That check runs once per
+        document and ``(tag, cls)``: a grid row's ``tag.cls`` field
+        reuses the page's pool and cuts it to the row (``within``)
+        instead of rescanning the page's class pool per row. Every
+        returned list is the index's own; callers must not mutate it."""
         tag = comp.tag
         cls = comp.classes
         if cls:
-            pool = self.by_class.get(cls[0], _EMPTY)
+            c0 = cls[0]
+            pool = self.by_class.get(c0, _EMPTY)
             if tag is None:
                 return pool
-            pool_t = self.by_tag.get(tag, _EMPTY)
-            if len(pool) <= len(pool_t):
-                return [el for el in pool if el.tag == tag]
-            c0 = cls[0]
-            return [el for el in pool_t if c0 in el.classes()]
+            key = (tag, c0)
+            found = self._tag_class.get(key)
+            if found is None:
+                pool_t = self.by_tag.get(tag, _EMPTY)
+                if len(pool) <= len(pool_t):
+                    found = [el for el in pool if el.tag == tag]
+                else:
+                    found = [el for el in pool_t if c0 in el.classes()]
+                self._tag_class[key] = found
+            return found
         if tag is not None:
             return self.by_tag.get(tag, _EMPTY)
         if comp.universal:

@@ -32,7 +32,7 @@ from pyspark.sql.types import (
     BooleanType, DoubleType, IntegerType, StringType, StructField,
 )
 
-from goose_parser_spark.dom.parser import Element, parse_html
+from goose_parser_spark.dom.parser import Element, page_scope, parse_html
 from goose_parser_spark.kernel import map_docs
 
 if TYPE_CHECKING:  # pragma: no cover
@@ -116,6 +116,7 @@ def score_candidates(root: Element) -> list[tuple[float, int, Element]]:
     return out
 
 
+@page_scope()
 def main_content(html: str | bytes) -> tuple[str, float]:
     """Extract (main_text, score) from one document. Falls back to the
     whole-body text when no candidate scores (text-only pages)."""
@@ -247,6 +248,7 @@ def _md_blocks(el: Element, out: list[str]) -> None:
                 out.append(s)
 
 
+@page_scope()
 def html_to_markdown(html: str | bytes) -> str:
     """Deterministic HTML→Markdown: headings/#, lists, links
     [text](href), emphasis, code fences, tables, blockquotes;
@@ -292,6 +294,7 @@ def extract_markdown(
 _WS_RUN = re.compile(r"\s+")
 
 
+@page_scope()
 def html_tables(html: str | bytes) -> list[tuple[int, int, bool, list[str]]]:
     """All tables of a page → ``(table_no, row_no, is_header, cells)``
     per <tr>. Tables are numbered in document order; a row belongs to

@@ -16,10 +16,12 @@ I2  Per-partition lineage + metrics — one row per bucket with
 I3  Checkpoint-based resume — a bucket is complete iff its metrics
     row is committed (metrics are written AFTER data, per bucket
     set); a run reads the committed buckets once and filters them out
-    of the pages and of its metrics pass, so finished partitions are
-    NEVER recomputed; when every bucket is committed the run stops
-    there. Idempotent via dynamic partition overwrite; ``resume=False``
-    replaces the metrics rows of the committed buckets it rewrote.
+    of the pages, so finished partitions are NEVER recomputed; when
+    every bucket is committed the run stops there. The metrics pass
+    reads only the bucket directories the run wrote, which its data
+    write observes. Idempotent via dynamic partition overwrite;
+    ``resume=False`` replaces the metrics rows of the committed
+    buckets it rewrote.
 I4  Failure isolation — lives in the extractor (error column); the
     metrics here count it.
 
@@ -31,8 +33,10 @@ Scale design notes (100 TB / 10^12 docs):
 - Resume state is one ``collect()`` of the metrics table (≤ one row
   per committed bucket — thousands, not billions) into a driver-side
   set; skipping is a ``NOT bucket IN (...)`` literal filter, so no
-  join touches the 100 TB side and the metrics pass's re-read of the
-  ``bucket``-partitioned output prunes to the buckets this run wrote.
+  join touches the 100 TB side. The metrics pass's re-read of the
+  ``bucket``-partitioned output loads the written buckets' directories
+  by path (``collect_set(bucket)`` observed on the write, ≤ ``buckets``
+  ints), so it never lists the whole ``data/`` directory.
 - Metrics aggregate from the extractor's per-doc parse_ns/bytes_in
   columns AFTER re-reading the committed output (columnar, light
   columns only) — so a metrics row can never exist for data that
@@ -206,12 +210,14 @@ class ExtractJob:
         repartition the extracted rows on ``bucket`` (I1) → partitioned
         write. The exchange carries results, not pages, and lands each
         bucket wholly in one task, so the write produces one file set
-        per bucket instead of tasks×buckets fragments. The metrics pass
-        then aggregates only the buckets not committed before this run,
-        and under ``resume=False`` also the committed buckets it
-        rewrote, whose metrics rows it replaces. A restart that finds
-        every bucket committed runs nothing after reading its resume
-        state.
+        per bucket instead of tasks×buckets fragments. The write
+        observes the set of buckets it wrote; the metrics pass loads
+        only those buckets' directories and aggregates them, replacing
+        the metrics rows of any that were committed before
+        (``resume=False``). A run that wrote no rows writes no metrics,
+        and a restart that finds every bucket committed runs nothing
+        after reading its resume state. A stale, uncommitted bucket
+        directory that this run did not rewrite gets no metrics row.
         """
         run_id = uuid.uuid4().hex
         t0 = time.time()
@@ -228,28 +234,23 @@ class ExtractJob:
         bucketed = with_bucket(
             pages.select(self.url_col, self.html_col), self.buckets, self.url_col
         )
-        # ≤ `buckets` literals: no join, and a partition filter on the
-        # bucket-partitioned output (I3)
-        todo = ~F.col("bucket").isin(sorted(done))
         if resume and done:
-            bucketed = bucketed.where(todo)
+            # ≤ `buckets` literals: no join (I3)
+            bucketed = bucketed.where(~F.col("bucket").isin(sorted(done)))
 
         parallelism = self.spark.sparkContext.defaultParallelism
         num_parts = min(self.buckets, max(32, parallelism * 2))
+        # the run learns which buckets it wrote from its own write
+        # (≤ `buckets` ints, no extra scan)
+        written = Observation("written")
         extracted = extract(
             bucketed,
             self.compiled,
             html_col=self.html_col,
             url_col=self.url_col,
             keep_cols=("bucket",),
-        ).repartition(num_parts, F.col("bucket"))
-        # a run that rewrites committed buckets learns which ones from
-        # its own write (≤ `buckets` ints, no extra scan)
-        rewrites = not resume and bool(done)
-        if rewrites:
-            written = Observation("written")
-            extracted = extracted.observe(
-                written, F.collect_set("bucket").alias("buckets"))
+        ).repartition(num_parts, F.col("bucket")).observe(
+            written, F.collect_set("bucket").alias("buckets"))
 
         # data write: partitioned by bucket, dynamic overwrite so a
         # re-run of an uncommitted bucket replaces its partial files
@@ -258,19 +259,19 @@ class ExtractJob:
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("bucket")
             .save(self.data_dir))
+        wrote = sorted(written.get["buckets"])
+        if not wrote:
+            return {**summary, "wall_seconds": time.time() - t0}
 
         # metrics AFTER data, derived from the committed output files —
         # re-read only the light columns (columnar scan skips html/
-        # extracted entirely) of the buckets without a metrics row (and
-        # of the rewritten ones), aggregate per bucket, append.
-        out = self.spark.read.format(self.fmt).load(self.data_dir)
-        todo_metrics = out.select("bucket", "error", "parse_ns", "bytes_in")
-        if rewrites:
-            rewritten = sorted(written.get["buckets"])
-            todo = todo | F.col("bucket").isin(rewritten)
-        if done:
-            todo_metrics = todo_metrics.where(todo)
-        metrics = (todo_metrics
+        # extracted entirely) of the buckets this run wrote, by their
+        # directories (data/ itself is never listed), aggregate per
+        # bucket, append.
+        out = (self.spark.read.format(self.fmt)
+               .option("basePath", self.data_dir)
+               .load([f"{self.data_dir}/bucket={b}" for b in wrote]))
+        metrics = (out.select("bucket", "error", "parse_ns", "bytes_in")
             .groupBy("bucket")
             .agg(
                 F.count("*").alias("docs_in"),
@@ -288,7 +289,8 @@ class ExtractJob:
             .withColumn("url_col", F.lit(self.url_col))
             .withColumn("completed_at", F.current_timestamp()))
         mode = "append"
-        if rewrites:
+        rewritten = sorted(done.intersection(wrote))
+        if rewritten:
             # replace the rewritten buckets' rows: the other committed
             # rows (≤ `buckets`) go through the driver, so the overwrite
             # never reads the directory it deletes. A crash mid-overwrite

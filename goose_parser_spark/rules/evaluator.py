@@ -28,7 +28,8 @@ evaluation order").
 
 from __future__ import annotations
 
-from goose_parser_spark.dom.parser import Element, parse_document, parse_html
+from goose_parser_spark.dom.parser import (
+    Element, page_scope, parse_document, parse_html)
 from goose_parser_spark.dom.selector import DocIndex, Selector, select_indexed
 from goose_parser_spark.functions.transforms import apply_chain
 from goose_parser_spark.rules import conventions
@@ -149,6 +150,7 @@ def evaluate_branches(branches: list[Branch], doc: _DocContext) -> object:
     return None
 
 
+@page_scope()
 def evaluate_document_many(
     compiled_by_name: dict[str, CompiledRules],
     html: str | bytes,
@@ -164,7 +166,7 @@ def evaluate_document_many(
     evaluation raises maps to None in ``row`` and adds a
     ``tree=<name>: <ExcClass>: <msg>`` entry to ``errors``, so one bad
     ruleset never poisons the other tenants. A document that fails to
-    parse raises."""
+    parse raises. The page's tree is freed on return (page_scope)."""
     root, elements = parse_document(html)
     universe = _union_universe(compiled_by_name.values())
     doc = _DocContext(root, elements, universe=universe)
@@ -193,6 +195,7 @@ def _union_universe(compiled_trees) -> tuple:
     return tags, classes, ids
 
 
+@page_scope()
 def evaluate_document(compiled: CompiledRules, html: str | bytes,
                       skip_lowered: bool = False) -> object:
     """Parse one document and evaluate the compiled rules against it.

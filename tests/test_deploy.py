@@ -112,10 +112,47 @@ def test_deleted_archive_behaves_like_the_stdlib(archive, reads, tmp_path):
                    for name in zipimport._zip_directory_cache[path])
 
 
+def test_install_shares_one_directory_per_archive():
+    """Installing re-reads each archive once and points all of its
+    importers at that one dict, freeing the copy per importer that the
+    stdlib method gave them; the next ``invalidate_caches()`` reads
+    nothing. Runs in a fresh interpreter, where the stdlib method is
+    still in place."""
+    script = (
+        "import importlib, importlib.util, sys, tempfile, zipfile, zipimport\n"
+        "path = tempfile.mkdtemp() + '/zipshare.zip'\n"
+        "with zipfile.ZipFile(path, 'w') as zf:\n"
+        "    for name in ('__init__', 'sub/__init__', 'sub/mod'):\n"
+        "        zf.writestr(f'zipshare/{name}.py', '')\n"
+        "sys.path.insert(0, path)\n"
+        "import zipshare.sub.mod\n"
+        "importlib.invalidate_caches()\n"
+        "imps = [f for k, f in sys.path_importer_cache.items()\n"
+        "        if k.startswith(path)]\n"
+        "assert len({id(i._files) for i in imps}) == len(imps) == 3\n"
+        "reads = []\n"
+        "real = zipimport._read_directory\n"
+        "zipimport._read_directory = lambda a: (reads.append(a), real(a))[1]\n"
+        "spec = importlib.util.spec_from_file_location('d', sys.argv[1])\n"
+        "d = importlib.util.module_from_spec(spec)\n"
+        "spec.loader.exec_module(d)\n"
+        "d.cache_zip_directories()\n"
+        "assert reads.count(path) == 1, reads\n"
+        "shared = zipimport._zip_directory_cache[path]\n"
+        "assert all(i._files is shared for i in imps)\n"
+        "reads.clear()\n"
+        "importlib.invalidate_caches()\n"
+        "assert reads == [], reads\n")
+    run = subprocess.run([sys.executable, "-c", script, deploy.__file__],
+                         capture_output=True, text=True)
+    assert run.returncode == 0, run.stderr
+
+
 def test_reused_spark_worker_skips_zip_rereads(spark):
-    """Tasks whose closure references the package: on every Python
-    worker that runs several of them, only its first re-reads zip
-    archives; the later ones make no ``_read_directory`` call."""
+    """Tasks whose closure references the package: no task body re-reads
+    a zip archive, not even a worker's first, because installing the
+    shim while the first task unpickles already read each archive
+    once."""
     ship_package(spark)
     install = cache_zip_directories   # imports the package on unpickle
 
@@ -151,8 +188,7 @@ def test_reused_spark_worker_skips_zip_rereads(spark):
     for r in rows:
         by_pid.setdefault(r["pid"], []).append(r["reads"])
     assert max(len(v) for v in by_pid.values()) >= 2
-    for counts in by_pid.values():
-        assert sum(c > 0 for c in counts) <= 1, by_pid
+    assert all(c == 0 for counts in by_pid.values() for c in counts), by_pid
 
 
 def test_idempotent():

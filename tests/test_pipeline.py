@@ -203,6 +203,34 @@ def test_restart_reads_committed_metrics_once_and_prunes_them(
     assert written and files_read == len(written)
 
 
+def test_restart_metrics_pass_lists_only_the_written_buckets(
+        spark, pages_df, tmp_path):
+    """The metrics pass loads the directories of the buckets the run
+    wrote, not ``data/``: listing ``data/`` walks every committed
+    bucket's directory before any partition filter applies. A run that
+    writes no rows writes no metrics."""
+    out = str(tmp_path / "out")
+    first = with_bucket(pages_df, 16).filter(F.col("bucket") < 8)
+    ExtractJob(spark, RULES, out, buckets=16).run(first.drop("bucket"))
+    metrics_before = sorted(map(tuple, spark.read.parquet(
+        f"{out}/metrics").collect()))
+    executions = _run_executions(spark, lambda: ExtractJob(
+        spark, RULES, out, buckets=16).run(first.drop("bucket")))
+    assert len(executions) == 2  # resume-state read, empty data write
+    assert sorted(map(tuple, spark.read.parquet(
+        f"{out}/metrics").collect())) == metrics_before
+
+    executions = _run_executions(spark, lambda: ExtractJob(
+        spark, RULES, out, buckets=16).run(pages_df))
+    _, nodes, _ = executions[-1]  # the metrics write
+    (scan,) = [n.desc() for n in nodes.values()
+               if n.name().startswith("Scan parquet")]
+    written = sorted(b for b in range(8, 16)
+                     if glob.glob(f"{out}/data/bucket={b}/*.parquet"))
+    assert written
+    assert f"InMemoryFileIndex({len(written)} paths)" in scan, scan
+
+
 def test_unreadable_metrics_fail_the_run(spark, pages_df, tmp_path):
     """Only a metrics dir with no committed file means a first run (a
     run killed in its metrics write leaves just ``_temporary/``); one

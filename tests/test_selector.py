@@ -510,3 +510,47 @@ def test_multi_step_grid_scopes_cost_constant_per_card(monkeypatch):
     small = _compound_checks_per_card(50, monkeypatch)
     large = _compound_checks_per_card(200, monkeypatch)
     assert large <= 1.2 * small, (small, large)
+
+
+def _pool_scans_per_card(cards, monkeypatch):
+    """Index pool members iterated per card while a grid with two
+    ``tag.class`` fields is evaluated over ``cards`` rows."""
+    from goose_parser_spark.rules import evaluator
+    from goose_parser_spark.rules.compiler import RuleCompiler
+
+    scanned = [0]
+
+    class CountingPool(list):
+        def __iter__(self):
+            scanned[0] += len(self)
+            return super().__iter__()
+
+    class CountingIndex(DocIndex):
+        def __init__(self, *a, **kw):
+            super().__init__(*a, **kw)
+            for pools in (self.by_tag, self.by_class):
+                for key, pool in pools.items():
+                    pools[key] = CountingPool(pool)
+
+    monkeypatch.setattr(evaluator, "DocIndex", CountingIndex)
+    compiled = RuleCompiler().compile({"scope": "div.card", "collection": [[
+        {"name": "title", "scope": "h3.t"},
+        {"name": "price", "scope": "span.price"},
+    ]]})
+    card = ('<div class="card"><h3 class="t">t</h3><span class="price">1'
+            '</span><span class="old">2</span></div>')
+    html = "<html><body>" + card * cards + "</body></html>"
+    out = evaluator.evaluate_document(compiled, html)
+    assert out == [{"title": "t", "price": "1"}] * cards
+    return scanned[0] / cards
+
+
+def test_grid_tag_class_fields_scan_each_pool_once(monkeypatch):
+    """A grid row's ``tag.class`` field reads the page's ``tag.class``
+    pool, built once per document, cut to the row: pool members
+    iterated per card stay flat from 100 to 3,200 cards. Rebuilding the
+    pool from the page's class pool on every row grows them with the
+    card count."""
+    small = _pool_scans_per_card(100, monkeypatch)
+    large = _pool_scans_per_card(3200, monkeypatch)
+    assert large <= 1.2 * small, (small, large)
